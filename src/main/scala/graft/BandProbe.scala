@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Candidate-count-vs-n probe for the banded hyperplane LSH
@@ -42,14 +41,7 @@ object BandProbe {
         val Array(r, b) = args(2).split(":").map(_.trim.toInt)
         Some((r, b))
       } else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
 
     val emb = Tables.embeddings(spark, dir)
     val out = moduli.sorted.reverse.map { m =>

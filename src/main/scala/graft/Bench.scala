@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark entrypoint. Runs every query in [[SparkEntry.queries]]
   * against `SPARK_GRAFT_SF_DIR` and reports per-query seconds.
@@ -17,20 +16,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // All entrypoints share Tables.normalizeTs's documented assumption
-      // that the session zone is UTC (epoch-preserving NTZ→TZ cast).
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "1m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.LogHygiene.quietWindowWarnings()
-    graft.plans.TopKPerKeyPlans.install(spark)
+    val spark = graft.core.Sessions.local(conf = Seq(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
+        sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "1m")))
     // Warm up codegen + parquet footers so the first measured query
     // doesn't absorb one-time JVM/session costs.
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection utility: prints the formatted physical plan of the
   * named queries (or all). Used to keep scan pushdown, broadcast
   * choices, and whole-stage codegen spans honest as the inventory
@@ -10,19 +8,12 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus("4"), logLevel = "ERROR")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       println(s"\n========== $name ==========")
       // planOnly: bypass Scoped's eager checkpoint so the REAL operator
-      // tree is printed — otherwise every withCached query explains as
+      // tree is printed — otherwise every Scoped.share query explains as
       // a one-line `Scan ExistingRDD` checkpoint stub (round-16
       // optimization round; same recipe as PlanPeek). Loop queries
       // whose round structure lives in driver code still execute their

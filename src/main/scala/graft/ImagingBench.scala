@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.core.JobSettings
 import graft.imaging.{ImageCodec, SmartSpimJob}
 
@@ -31,14 +29,8 @@ object ImagingBench {
     val nz = if (args.length > 0) args(0).toInt else 160
     val ny = if (args.length > 1) args(1).toInt else 1600
     val nx = if (args.length > 2) args(2).toInt else 2000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = graft.core.Sessions.cpus()
+    val spark = graft.core.Sessions.local(cpus)
     import spark.implicits._
 
     val root = Files.createTempDirectory("graft_imaging_bench")

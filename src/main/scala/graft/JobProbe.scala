@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job attribution probe (optimization round 16, guide §1):
   * runs named inventory queries (after one untimed warm-up pass) with
@@ -21,16 +20,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: JobProbe <query> [query ...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.LogHygiene.quietWindowWarnings()
-    graft.plans.TopKPerKeyPlans.install(spark)
+    val spark = graft.core.Sessions.local()
     spark.range(1000).selectExpr("sum(id)").collect()
     Tables.names.foreach { t =>
       try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,15 +13,7 @@ object MicroBench {
     val what = args.headOption.getOrElse("topk")
     val rows = args.lift(1).map(_.toLong).getOrElse(20000000L)
     val keys = args.lift(2).map(_.toInt).getOrElse(1000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.LogHygiene.quietWindowWarnings()
+    val spark = graft.core.Sessions.local(topK = false)
 
     what match {
       case "topk" =>

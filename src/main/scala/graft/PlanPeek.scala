@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: execute named inventory queries at a given SF dir and
   * print the EXECUTED (post-AQE) physical plan — the same
   * collect-then-inspect recipe PlanDigestSpec uses (count() would
@@ -12,11 +10,7 @@ import org.apache.spark.sql.SparkSession
 object PlanPeek {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: PlanPeek <sfDir> <query> [query ...]")
-    val s = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-planpeek").getOrCreate()
-    graft.plans.TopKPerKeyPlans.install(s)
+    val s = graft.core.Sessions.local("8")
     for (n <- args.drop(1)) {
       // planOnly: bypass Scoped's checkpoint so the REAL operator tree
       // is visible (otherwise the top plan is just Scan ExistingRDD)

@@ -99,14 +99,7 @@ object ScaleUp {
     val only: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet) else None
     require(factor >= 1, "factor must be >= 1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local()
 
     def keySpan(df: DataFrame, c: String): Long =
       df.agg(max(col(c))).head.getLong(0) + 1L

@@ -56,7 +56,7 @@ object SmartSpimMain {
 
   def main(args: Array[String]): Unit = {
     val settings = settingsFrom(args, sys.env)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.Sessions.cpus()
     val builder = SparkSession.builder()
       .appName("smartspim-to-ome-zarr")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-off diagnostic: run a streaming inventory query once and print
   * its per-micro-batch StreamingQueryProgress durations, to attribute
   * the per-invocation wall cost between harness phases (staging is
@@ -12,15 +10,7 @@ object StreamProbe {
   def main(args: Array[String]): Unit = {
     val name = if (args.nonEmpty) args(0) else "q_stream_join"
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKPerKeyPlans.install(spark)
+    val spark = graft.core.Sessions.local()
     (1 to 3).foreach { pass =>
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).count()

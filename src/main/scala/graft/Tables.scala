@@ -75,8 +75,7 @@ object Tables {
     * cached explode frames feed many CPU-heavy downstream stages). */
   private[graft] def spread(df: DataFrame, key: String): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (sys.env.get("SPARK_GRAFT_SPREAD").contains("0")) df
-    else if (df.rdd.getNumPartitions >= p) df
+    if (df.rdd.getNumPartitions >= p) df
     else df.repartition(p, org.apache.spark.sql.functions.col(key))
   }
 

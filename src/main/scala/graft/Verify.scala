@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,18 +9,9 @@ object Verify {
     // iteration aid — the driver always runs the full inventory)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.LogHygiene.quietWindowWarnings()
-    // custom top-k operator live for the whole suite: every window
+    val spark = graft.core.Sessions.local(graft.core.Sessions.cpus("4"))
+    // the factory installs the custom top-k operator: every window
     // top-k query's hash-match doubles as its regression test
-    graft.plans.TopKPerKeyPlans.install(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

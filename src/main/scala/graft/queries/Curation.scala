@@ -85,7 +85,7 @@ object Curation {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
         size(tokens(col("text"))).cast("long").as("n_tok"))
-    Scoped.withCached(docs) {
+    Scoped.share(docs) {
       val med = docs.groupBy(col("lang").as("m_lang"))
         .agg(percentile(col("n_tok"), lit(0.5)).as("med"))
       val dv = docs.join(broadcast(med), col("lang") === col("m_lang"))
@@ -133,7 +133,7 @@ object Curation {
         (col("doc_id") % DSIR_MOD === 0).as("tgt"),
         explode(tokens(col("text"))).as("tok"))
       .withColumn("b", hash28(col("tok")) % DSIR_B)
-    Scoped.withCached(tk) {
+    Scoped.share(tk) {
       val counts = tk.groupBy("b").agg(
         sum(when(col("tgt"), 1L).otherwise(0L)).as("ct"),
         sum(when(col("tgt"), 0L).otherwise(1L)).as("cp"))
@@ -348,14 +348,18 @@ object Curation {
   /** Join posture for the KN scorers' WORD-keyed statistics tables
     * (one row per distinct word — Heaps-law vocabulary growth, the
     * same boundedness the model already assumes when it broadcasts
-    * its count-of-counts row): broadcast, so the n-gram model stream
-    * skips a full re-shuffle per statistic. The N-GRAM-keyed tables
-    * (ctx/cont — corpus-scale) stay shuffle_hash. Env-gated to the
-    * shuffle form for same-binary A/Bs and for deployments whose
-    * vocabulary outgrows executor memory. */
-  private def knPerWord(df: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_KN_BCAST").contains("0")) df.hint("shuffle_hash")
-    else broadcast(df)
+    * its count-of-counts row): broadcast while the optimizer's size
+    * estimate fits `spark.sql.autoBroadcastJoinThreshold`, so the
+    * n-gram model stream skips a full re-shuffle per statistic;
+    * shuffle_hash above it (or with broadcasts disabled, -1), so a
+    * vocabulary that outgrows executor memory is never broadcast. An
+    * explicit `broadcast()` would bypass the threshold. The
+    * N-GRAM-keyed tables (ctx/cont — corpus-scale) stay shuffle_hash. */
+  private def knPerWord(df: DataFrame): DataFrame = {
+    val limit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (limit >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= limit) broadcast(df)
+    else df.hint("shuffle_hash")
+  }
 
   /** Interpolated Kneser-Ney bigram scoring — the smoothing the real
     * CCNet pipeline's KenLM actually uses (Kneser & Ney 1995; Chen &
@@ -563,7 +567,7 @@ object Curation {
     *
     * Deliberately NOT cached: ct/cont each feed several consumers, but
     * they are all aggregates over the SAME groupBy exchange, which
-    * ReuseExchange dedups for free — an explicit Scoped.withCached
+    * ReuseExchange dedups for free — an explicit Scoped.share
     * measured 1.9 → 3.5 s at sf0.1 (serial materialization barriers +
     * a non-codegen cached scan replacing the reused exchange). */
   val qQualityKnTri: Q = (s, d) => {
@@ -757,7 +761,7 @@ object Curation {
           >= QG_MIN_STOPS, 1L).otherwise(-1L).as("y"),
         (hash28(concat(lit("clf_"), col("doc_id").cast("string"))) % 10 < 8).as("train"),
         col("w"))
-    Scoped.withCachedEager(docs) {
+    Scoped.share(docs) {
       // Class counts straight off a map-side explode carrying the
       // label: partial agg collapses each task to ≤ B bucket rows, so
       // the shuffle is B-row partials — the per-(doc_id, b) grouping
@@ -858,7 +862,7 @@ object Curation {
   val qTextRepetition: Q = (s, d) => {
     val base = Tables.documents(s, d).where(col("doc_id") % 20 === 0)
       .withColumn("w", tokens(col("text")))
-    Scoped.withCached(base) {
+    Scoped.share(base) {
       val stats = base.select(col("doc_id"),
         size(col("w")).as("n_tok"), size(array_distinct(col("w"))).as("n_dist"))
       val topBg = base
@@ -1227,7 +1231,7 @@ object Curation {
     val c = Tables.documents(s, d)
       .select(col("lang"), col("source"), col("n_chars").as("x"))
       .groupBy("lang", "source", "x").agg(count(lit(1)).as("n"))
-    Scoped.withCached(c) {
+    Scoped.share(c) {
       val grid = c.select("lang", "x").distinct()
       val srcs = c.groupBy("lang", "source").agg(sum("n").as("n_s"))
       val tot = c.groupBy("lang").agg(sum("n").as("n_all"))
@@ -1281,7 +1285,7 @@ object Curation {
     val sh = Tables.documents(s, d)
       .select(col("source"), explode(shingles(tokens(col("text")), OVL_N)).as("sp"))
       .distinct()
-    Scoped.withCached(sh) {
+    Scoped.share(sh) {
       val tot = sh.groupBy("source").agg(count(lit(1)).as("n"))
       sh.select(col("source").as("src_a"), col("sp"))
         .join(sh.select(col("source").as("src_b"), col("sp")), "sp")

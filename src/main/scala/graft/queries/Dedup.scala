@@ -83,7 +83,7 @@ object Dedup {
       .where(col("df") <= SHINGLE_DF_CAP)
       .select("s")
     val sh = shAll.join(rare, Seq("s"), "left_semi")
-    Scoped.withCached(shAll, sh) {
+    Scoped.share(shAll, sh) {
       val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
       val pairs = sh.as("a").join(sh.as("b"),
           col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -171,13 +171,13 @@ object Dedup {
     //    stream the cached shingle table (two single-task 1.2–1.5 s
     //    broadcast-join probe stages over the one-partition cache);
     //    a structural no-op once the scan has >= cores splits.
-    //  - `Scoped.withMaterialized` builds the shared shingle frame
+    //  - `Scoped.shareEager` builds the shared shingle frame
     //    ONCE: the lazy `.cache()` let AQE's concurrent broadcast
     //    builds re-run the scan+explode eight times (~240 ms each)
     //    before the first writer populated the cache.
     val shRaw = Tables.spread(Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), explode(shingles(tokens(col("text")), 3)).as("s"))
-    Scoped.withMaterialized(shRaw) { sh =>
+    Scoped.shareEager(shRaw) { sh =>
       val cnt = sh.groupBy("doc_id").agg(count(lit(1)).as("c"))
       val dfc = sh.groupBy("s").agg(count(lit(1)).as("df"))
       val prefix = sh.join(dfc, "s").join(cnt, "doc_id")
@@ -257,7 +257,7 @@ object Dedup {
 
   /** 16-permutation MinHash signatures of any (doc_id, text) doc set.
     * Uncached here — each query caches it for its own scope
-    * (Scoped.withCached) so the entry doesn't outlive the invocation. */
+    * (Scoped.share) so the entry doesn't outlive the invocation. */
   private[graft] def minhashSignatures16Of(docs: DataFrame): DataFrame = {
     val mhCols = (0 until NPERM).map { j =>
       min((col("h") * permA(j) + permB(j)) % P).as(s"mh$j")
@@ -291,13 +291,13 @@ object Dedup {
     * a 28-bit md5-derived hash, 8 bands × 2 rows; candidate pairs =
     * distinct band-key matches. */
   val qDedupMinhash: Q = (s, d) => {
-    // Scoped.withMaterialized was A/B'd here in round 17 and LOST
+    // Scoped.shareEager was A/B'd here in round 17 and LOST
     // (1.60/1.63 s vs 1.17/1.23 s interleaved): with only the one band
     // self-join downstream, the eager checkpoint write costs more than
     // the duplicate signature build it prevents — unlike cluster/apply,
     // whose fixpoint loop re-reads the signature table many times.
     val sig = minhashSignatures16(s, d)
-    Scoped.withCached(sig)(minhashBandCandidates(sig).orderBy("da", "db"))
+    Scoped.share(sig)(minhashBandCandidates(sig).orderBy("da", "db"))
   }
 
   /** Band-candidate pairs VERIFIED at signature agreement ≥ minAgree —
@@ -361,7 +361,7 @@ object Dedup {
     // sides and the label init. A lazy .cache() here let concurrent
     // subtree builds duplicate the 16-perm signature aggregate (~4-6 s
     // of task time re-spent per invocation — JobProbe round 17, the
-    // same race Scoped.withMaterialized documents); the eager build
+    // same race Scoped.share documents); the eager build
     // runs it once. The returned plan reads only checkpointed labels,
     // so the release cannot affect the result.
     val sig = Scoped.materializeRound(minhashSignatures16Of(docs))
@@ -481,7 +481,7 @@ object Dedup {
 
   val qDedupSimhash: Q = (s, d) => {
     val sim = simhashSignatures(s, d)
-    Scoped.withCached(sim) {
+    Scoped.share(sim) {
     val bands = sim.select(col("doc_id"), col("simhash"),
         explode(array((0 until 4).map(b => struct(lit(b).as("band_id"),
           shiftright(col("simhash"), 8 * b).bitwiseAND(lit(255L)).as("bv"))): _*)).as("bs"))
@@ -523,7 +523,7 @@ object Dedup {
     val bp = Similarity.bandedParams(sample.count())
     val e = sample.select(col("vec_id"), col("embedding"),
       Similarity.bandVals(col("embedding"), bp).as("bands"))
-    Scoped.withCached(e) {
+    Scoped.share(e) {
       val bands = e.select(col("vec_id"), explode(col("bands")).as("bs"))
         .select(col("vec_id"), col("bs.band_id").as("band_id"), col("bs.bv").as("bv"))
       val cand = bands.as("a").join(bands.as("b"),
@@ -563,8 +563,9 @@ object Dedup {
     val fp = md5(concat_ws(" ", slice(tokens(col("text")), 1, INC_PREFIX)))
     val docs = Tables.documents(s, d).withColumn("h", fp)
     val existing = docs.where(col("doc_id") % INC_MOD === 0).select("h").distinct()
-    // eager: the count and bloom build are driver actions on `existing`
-    Scoped.withCachedEager(existing) {
+    // the count and bloom build are driver actions on `existing`; share
+    // caches it before the body, so they read the scope
+    Scoped.share(existing) {
       val incoming = docs.where(col("doc_id") % INC_MOD =!= 0)
       val n = existing.count().max(1L)
       val bf = existing.stat.bloomFilter("h", n, 0.01)
@@ -660,7 +661,7 @@ object Dedup {
   val qDedupMultilen: Q = (s, d) => {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("w"))
-    Scoped.withCached(docs) {
+    Scoped.share(docs) {
       // Grams stay RAW-string-keyed through both exchanges, by
       // measurement: md5-keying them first (the qDedupLines pattern,
       // 32-byte fixed keys, shuffle bytes 3-4x down) read 1.22x
@@ -801,18 +802,7 @@ object Dedup {
     // does not retry it.
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("w"))
-    // env-gated phase clock (SPARK_GRAFT_PHASE_LOG=1): each phase ends
-    // at a driver action, so the deltas are real wall attributions
-    val phaseT0 = System.nanoTime()
-    var phaseLast = phaseT0
-    def phase(name: String): Unit =
-      if (sys.env.get("SPARK_GRAFT_PHASE_LOG").contains("1")) {
-        val now = System.nanoTime()
-        System.err.println(f"[sfx-phase] $name%-12s +${(now - phaseLast) / 1e9}%.2fs " +
-          f"(total ${(now - phaseT0) / 1e9}%.2fs)")
-        phaseLast = now
-      }
-    Scoped.withCachedEager(docs) {
+    Scoped.share(docs) {
       // ----- phases 1+2 BY SORT (round 16; see scaladoc): one global
       // range sort of every position's 8-token prefix key, then per-doc
       // lmax = max rank-adjacent cross-doc token-LCP. Replaces the
@@ -887,7 +877,6 @@ object Dedup {
       }
       val ranked = Scoped.materializeRound(
         s.createDataFrame(rankedRdd, rankedSchema))
-      phase("possort")
       // partition-boundary adjacent pairs, computed on the driver from
       // the accumulator (≤ 2 rows per partition — a bounded model)
       import scala.jdk.CollectionConverters._
@@ -910,7 +899,6 @@ object Dedup {
         }
       val gm = Scoped.materializeRound(
         withEdges.groupBy("doc_id").agg(max(col("plcp")).as("lmax")))
-      phase("lmax")
       // ----- phase 3: prefix-doubling suffix ranks on the closed tail
       val sub = docs.join(gm.where(col("lmax") === TOP).select("doc_id"),
         Seq("doc_id"), "left_semi")
@@ -920,7 +908,6 @@ object Dedup {
       // separate isEmpty probe job into the latter (round-15, verdict
       // item 4: one fewer driver round-trip on the critical path)
       val maxnRow = sub.agg(max("n"), sum("n")).head()
-      phase("probe")
       val l3 = if (maxnRow.isNullAt(0))
         docs.limit(0).select(col("doc_id"), lit(0L).as("l3"))
       else {
@@ -952,7 +939,6 @@ object Dedup {
             Seq("doc_id"), "left_semi")
           .select(col("doc_id"), col("p"), col("r"))
         var levels = List[(Long, DataFrame)]((8L, Scoped.materializeRound(seed)))
-        phase("seed")
         var span = 8L
         var unique = false
         while (span < maxn && !unique) {
@@ -971,7 +957,6 @@ object Dedup {
           span = span * 2
           levels = (span, nxt) :: levels
           unique = acc.value == 0L
-          phase(s"double@$span")
         }
         // cross-doc rank-adjacent boundary pairs. Small path (the same
         // ≤ 2M single-task bound as rankSort): the sorted frame has ONE
@@ -1016,7 +1001,6 @@ object Dedup {
           .join(broadcast(nd.select(col("doc_id").as("db"), col("n").as("nb"))), "db")
           .withColumn("ell", lit(0L))
         var pairs = Scoped.materializeRound(adj)
-        phase("adj")
         // the descent CHAINS unmaterialized: each level's frame is
         // consumed exactly once by the next (linear lineage, no
         // exponential re-execution), so the 2·K joins pipeline into
@@ -1089,7 +1073,6 @@ object Dedup {
           .unionAll(pairs.select(col("db").as("doc_id"), col("ell"))) 
           .groupBy("doc_id").agg(max("ell").as("l3"))
         val res = Scoped.materializeRound(best)
-        phase("descent")
         levels.foreach { case (_, lvl) => Scoped.releaseRound(lvl) }
         Scoped.releaseRound(pairs)
         res
@@ -1277,7 +1260,7 @@ object Dedup {
   val qDedupTrim: Q = (s, d) => {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("w"))
-    Scoped.withCached(docs) {
+    Scoped.share(docs) {
       val occ = docs.select(col("doc_id"),
           posexplode(graft.functions.TextExpressions
             .shinglesAllFast(col("w"), SPAN_N)))
@@ -1321,7 +1304,7 @@ object Dedup {
     * or removal. */
   val qSplitLeakage: Q = (s, d) => {
     val sig = minhashSignatures16(s, d)
-    Scoped.withCached(sig) {
+    Scoped.share(sig) {
       minhashBandCandidates(sig)
         .select(splitOf(col("da")).as("ra"), splitOf(col("db")).as("rb"))
         .select(least(col("ra"), col("rb")).as("split_a"),
@@ -1413,7 +1396,7 @@ object Dedup {
         lit(0L).as("df"))
     val vocab = toks.unionAll(variants)
       .groupBy("tok").agg(max("df").as("df")) // variant colliding with a real token keeps its df
-    val keyed = Scoped.withCached(vocab) {
+    val keyed = Scoped.share(vocab) {
       vocab.select(col("tok"), col("df"), explode(array_union(
         array(col("tok")),
         transform(sequence(lit(1), length(col("tok"))),

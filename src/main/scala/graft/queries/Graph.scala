@@ -49,7 +49,7 @@ object Graph {
     val loopParts = 4
     val edges = rawEdges.withColumn("deg", count(lit(1)).over(w))
       .repartition(loopParts, col("src"))
-    Scoped.withCached(edges) {
+    Scoped.share(edges) {
       val nodes = edges.select(col("src").as("node"))
         .union(edges.select(col("dst"))).distinct()
         .repartition(loopParts, col("node"))
@@ -125,7 +125,7 @@ object Graph {
     // as the edges' endpoints — which costs one tiny aggregate on a
     // materialized input instead of keeping two more corpus-lineage
     // caches alive through the whole query.
-    val oM = Scoped.withCached(sig, edges)(oRaw)
+    val oM = Scoped.share(sig, edges)(oRaw)
     val degO = oM.select(col("src").as("v"))
       .unionAll(oM.select(col("dst").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -134,7 +134,12 @@ object Graph {
       .where(col("d1") < col("d2") ||
         (col("d1") === col("d2") && col("v1") < col("v2")))
       .select("src", "v1", "v2")
-    val nTri = wedges
+    // the wedges are hash-partitioned on the closing key up front, as
+    // the semi-join needs wherever `o` is too big to broadcast. Left
+    // to AQE, this exchange existed or not depending on whether the
+    // closure turned into a broadcast join before or after the wedge
+    // stage was created, a race between concurrent stage builds.
+    val nTri = wedges.repartition(col("v1"), col("v2"))
       .join(oM.select(col("src").as("v1"), col("dst").as("v2")),
         Seq("v1", "v2"), "left_semi")
       .agg(count(lit(1)).as("n_triangles"))
@@ -182,7 +187,7 @@ object Graph {
       .union(e.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
       .repartition(loopParts, col("src"))
-    Scoped.withCached(und) {
+    Scoped.share(und) {
       var labels = und.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))
         .repartition(loopParts, col("node"))
@@ -240,7 +245,7 @@ object Graph {
       .union(e.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
       .repartition(loopParts, col("src"))
-    Scoped.withCached(und0) {
+    Scoped.share(und0) {
       // ONE job collects the node-domain-bounded degree table
       // (≤ KC_MOD rows) and the driver derives everything the old
       // setup paid three jobs for: the node count, the exact
@@ -318,7 +323,7 @@ object Graph {
     // signature table materialized EAGERLY (round 17): the verified-
     // pair build reads it via three concurrent join-side subtrees
     // which otherwise race to evaluate the lazily-cached aggregate
-    // (Scoped.withMaterialized scaladoc); the result below is a local
+    // (Scoped.share scaladoc); the result below is a local
     // driver frame, so only the input needs materializing.
     val sig = Scoped.materializeRound(Dedup.minhashSignatures16Of(
       Tables.documents(s, d).where(col("doc_id") % 25 === 0)))
@@ -527,7 +532,7 @@ object Graph {
     val und = e.select(col("a").as("src"), col("b").as("dst"))
       .unionAll(e.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
-    Scoped.withCached(und) {
+    Scoped.share(und) {
       val nodes = und.select(col("src").as("node")).distinct()
       var assigned = Scoped.materializeRound(nodes.where(col("node") < BFS_SEEDS)
         .withColumn("dist", lit(0)))

@@ -105,7 +105,7 @@ object Multimodal {
     val hashed = MediaColumns.perceptualHashes(media).toDF("pk", "ph")
     val clusters = hashed.groupBy("ph")
       .agg(count(lit(1)).as("n"), min("pk").as("rep"))
-    Scoped.withCached(clusters) {
+    Scoped.share(clusters) {
       val bandStructs = array((0 until PH_BANDS).map { b =>
         struct(lit(b).as("band_id"),
           (shiftright(col("ph"), b * PH_BAND_BITS) % lit(1 << PH_BAND_BITS)).as("bk"))
@@ -168,7 +168,7 @@ object Multimodal {
       Seq(clip(id, 0), clip(id + AFP_PERT_ID, 1))
     }
     val fps = MediaColumns.audioFingerprints(media).toDF("id", "afp")
-    Scoped.withCached(fps) {
+    Scoped.share(fps) {
       val bandStructs = array((0 until 4).map { b =>
         struct(lit(b).as("band_id"),
           (shiftright(col("afp"), b * 8) % lit(256)).as("bk"))

@@ -258,7 +258,7 @@ object Pipeline {
     val perLang = Tables.documents(s, d)
       .select(col("lang"), size(tokens(col("text"))).cast("long").as("n_tok"))
       .groupBy("lang").agg(sum("n_tok").as("c"))
-    Scoped.withCached(perLang)(unimaxAlloc(perLang))
+    Scoped.share(perLang)(unimaxAlloc(perLang))
   }
 
   /** The K-row water-fill over a (lang, c) per-language token-count
@@ -526,11 +526,10 @@ object Pipeline {
     val docs = Tables.documents(s, d)
     val bench = shingleOf(docs.where(col("doc_id") % DECON_MOD === 0))
       .select("s").distinct()
-    // EAGER scope: the body runs driver actions (the eval-side count
-    // and the bloom build) — withCached would cache only after the
-    // body, so those actions would recompute the tokenize/shingle
-    // chain uncached each time
-    Scoped.withCachedEager(bench) {
+    // the body runs driver actions (the eval-side count and the bloom
+    // build); share caches `bench` before the body, so they read the
+    // scope instead of recomputing the tokenize/shingle chain
+    Scoped.share(bench) {
       val train = shingleOf(docs.where(col("doc_id") % DECON_MOD =!= 0))
       // Size the bloom from the data, not a constant: an undersized
       // filter silently degrades its fpp, which weakens the map-side
@@ -588,10 +587,10 @@ object Pipeline {
     val bench = docs.where(col("doc_id") % DECON_MOD === 0)
       .select(explode(shingles(tokens(col("text")), PIPE_SHINGLE_N)).as("s"))
       .distinct()
-    // EAGER scope (see qDecontaminate): the fixpoint and the bloom
-    // build are driver actions against qual/bench — they must hit the
-    // caches, not rebuild the tokenize/shingle chains per action.
-    Scoped.withCachedEager(qual, bench) {
+    // the fixpoint and the bloom build are driver actions against
+    // qual/bench; share caches both before the body (see
+    // qDecontaminate), so no action rebuilds the tokenize/shingle chains.
+    Scoped.share(qual, bench) {
       // stage 3's bloom build (two actions on the tiny cached eval
       // side) is independent of stage 2's cluster fixpoint — run it on
       // a concurrent driver thread so its jobs fill the fixpoint's

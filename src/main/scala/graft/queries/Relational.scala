@@ -251,8 +251,7 @@ object Relational {
     // entries and /tmp paths accumulate unboundedly across runs. In
     // plan-only mode (or a cluster with no checkpoint dir) the lazy
     // plan still reads the tables, so they must stay alive — skip.
-    val sc = s.sparkContext
-    if (Scoped.isPlanOnly || (!sc.isLocal && sc.getCheckpointDir.isEmpty)) agg
+    if (!Scoped.materializes(s)) agg
     else {
       val out = Scoped.materializeRound(agg)
       dropBucketedLayout(s, d)
@@ -509,7 +508,7 @@ object Relational {
     val words = Tables.documents(s, d)
       .select(explode(graft.functions.TextExpressions
         .shinglesAllFast(tokens(col("text")), 2)).as("tok"))
-    Scoped.withCached(words) {
+    Scoped.share(words) {
       val sketch = words
         .select(posexplode(buckets(col("tok"))).as(Seq("depth", "bucket")))
         .groupBy("depth", "bucket").agg(count(lit(1)).as("c"))
@@ -570,7 +569,7 @@ object Relational {
     val setBits = keys
       .select(col("flag"), explode(positions(col("k"))).as("pos"))
       .distinct() // ≤ m rows per flag: the filter itself
-    Scoped.withCached(setBits) {
+    Scoped.share(setBits) {
       val stats = keys.groupBy("flag").agg(count(lit(1)).as("n_keys"))
         .join(setBits.groupBy("flag").agg(count(lit(1)).as("bits_set")), "flag")
       val probePos = s.range(BLOOM_PROBES.toLong).toDF("i")
@@ -662,8 +661,7 @@ object Relational {
     val srcs: Array[String] = Tables.documents(s, d)
       .select("source").distinct().orderBy("source")
       .collect().map(_.getString(0))
-    val useMask = forceMask.getOrElse(srcs.nonEmpty && srcs.length <= 62 &&
-      !sys.env.get("SPARK_GRAFT_KMV_MASK").contains("0"))
+    val useMask = forceMask.getOrElse(srcs.nonEmpty && srcs.length <= 62)
     require(!(useMask && (srcs.isEmpty || srcs.length > 62)),
       s"bitmask path forced but alphabet has ${srcs.length} sources")
     // the cached corpus digest: h → source bitmask on the fast path,
@@ -701,13 +699,13 @@ object Relational {
     // q_dedup_suffix 3.58 → 4.8 s) — recorded in OPTIMIZATION_r16.md;
     // the env knob (SPARK_GRAFT_MIN_PART_SIZE) stays for deployments
     // whose shuffles are CPU-bound rather than latency-bound.
-    // withMaterialized, not withCached (optimization round 17): the
+    // eager share, not a lazy one (optimization round 17): the
     // lazy cache let AQE's concurrent subtree builds run the 375 KB
     // corpus digest pass TWICE inside one invocation (JobProbe jobs
     // 134+144, ~640 ms of duplicate corpus scan+explode); eager
     // materialization builds it once and every downstream pass —
     // unroll, window, pair scan, exact audit — reads the blocks.
-    Scoped.withMaterialized(digest) { base =>
+    Scoped.shareEager(digest) { base =>
       // static unroll over the alphabet: S null-filtered whens per row
       // (all inside whole-stage codegen; S ≤ 62 keeps janino far from
       // the ~120-branch limit BandedSignature hit)
@@ -743,7 +741,7 @@ object Relational {
         .withColumn("rn", row_number().over(Window.partitionBy("source").orderBy("h")))
         .where(col("rn") <= KMV_K)
         .select("source", "h")
-      Scoped.withCached(sk) {
+      Scoped.share(sk) {
         val nd = hh.groupBy("source").agg(count(lit(1)).as("nd"))
         // estimates in INTEGER MILLI units — pure BIGINT division on
         // both engines (a round()ed double estimate hit a genuine
@@ -894,7 +892,7 @@ object Relational {
     val K = 256
     val ev = Tables.events(s, d)
       .select(col("event_type"), col("event_id"), col("value"))
-    Scoped.withCached(ev) {
+    Scoped.share(ev) {
       val samp = ev
         .withColumn("h", hash28(concat(col("event_id").cast("string"), lit(":qs"))))
         .withColumn("rn", row_number().over(

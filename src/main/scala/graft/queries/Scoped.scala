@@ -1,102 +1,159 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import scala.util.DynamicVariable
 
-/** Query-scoped caching.
+/** Query-scoped sharing and loop-round materialization.
   *
   * Spark's `CacheManager` keys cache entries by logical plan and holds
   * them for the life of the session: a query that calls `.cache()` and
   * never unpersists leaks one block-manager entry per invocation, so a
-  * long-lived session serving the inventory repeatedly accumulates
-  * cached shingle/signature tables forever. `withCached` scopes the
-  * cache to the query: it caches the intermediates, MATERIALIZES the
-  * result while they are alive (eager checkpoint — computed
-  * distributed, no driver collect — truncates the lineage so the
-  * returned plan no longer references the caches), then unpersists in
-  * a `finally`. The checkpointed result RDD itself is released by
-  * Spark's ContextCleaner once the caller drops the returned DataFrame
-  * (reference-tracked, GC-driven) — CacheSpec pins that the
-  * persistent-RDD set returns to baseline after a full inventory pass.
+  * long-lived session serving the inventory repeatedly would accumulate
+  * shingle/signature tables forever. So an intermediate read by
+  * several subtrees of one query goes through [[share]] (or
+  * [[shareEager]]), and the state of an iterative loop goes through
+  * [[materializeRound]] and [[releaseRound]]. What they do depends
+  * on the deployment regime, which ONE function decides
+  * ([[regimeOf]]):
   *
-  * Materialization strategy by deployment:
-  *   - local master: `localCheckpoint(eager)` — blocks live in the one
-  *     JVM, executor loss is process death anyway.
-  *   - cluster master with a checkpoint dir: reliable
-  *     `checkpoint(eager)` — `localCheckpoint` would tie result blocks
-  *     to executor liveness, which dynamic allocation / preemption
-  *     breaks (Spark explicitly warns against it there).
-  *   - cluster master without a checkpoint dir: no scoped caching at
-  *     all — return the lazy plan untouched. The shared intermediates
-  *     recompute from lineage (slower, never wrong) and zero state is
-  *     retained.
+  * {{{
+  *            | Local             | Reliable           | Lineage
+  *            | (local master)    | (cluster master,   | (cluster master,
+  *            |                   |  checkpoint dir)   |  no checkpoint dir)
+  * -----------+-------------------+--------------------+--------------------
+  * share,     | inputs cached     | inputs cached      | body over the raw
+  * shareEager | (shareEager: ma-  | (shareEager: ma-   | inputs; the lazy
+  *            | terializeRound)   | terializeRound)    | plan is returned
+  *            | before the body;  | before the body;   | and NOTHING is
+  *            | result localChe-  | result checkpoint; | kept: shared
+  *            | ckpoint; inputs   | inputs released in | intermediates
+  *            | released in a     | a finally          | recompute from
+  *            | finally           |                    | lineage
+  * materialize| localCheckpoint   | checkpoint(eager)  | persist(MEMORY_
+  *   Round    | (eager)           |                    | AND_DISK) + count
+  * release    | unpersist (blocks | unpersist + delete | unpersist
+  *   Round    | go with the       | the round's        |
+  *            | reference)        | checkpoint files   |
+  * }}}
+  *
+  * Local keeps blocks in the one JVM, where executor loss is process
+  * death anyway. Reliable checkpoints because `localCheckpoint` would
+  * tie state to executor liveness, which dynamic allocation and
+  * preemption break (Spark warns against it there). Lineage keeps
+  * nothing a scope could leak; its loops persist, which cannot
+  * truncate the plan, so deployments should set a checkpoint dir
+  * (SCALE.md). Checkpointed and localCheckpointed RDDs are released by
+  * Spark's ContextCleaner once the caller drops the returned DataFrame;
+  * CacheSpec pins that the persistent-RDD and CacheManager sets return
+  * to baseline in all three regimes.
   */
 object Scoped {
   /** Plan-inspection hook (PlanSpec): inside `planOnly { ... }`,
-    * `withCached` returns the raw lazy plan — no cache, no checkpoint —
+    * [[share]] returns the raw lazy plan — no cache, no checkpoint —
     * so plan guards assert on the exact tree that executes inside the
-    * wrapper. Thread-local (`DynamicVariable`), so a PlanSpec explain
+    * scope. Thread-local (`DynamicVariable`), so a PlanSpec explain
     * on one suite thread cannot flip behavior for queries running
-    * concurrently on another. Never used outside tests. */
+    * concurrently on another. Never used outside tests and plan
+    * printers. */
   private val planOnlyFlag = new DynamicVariable[Boolean](false)
   def planOnly[A](body: => A): A = planOnlyFlag.withValue(true)(body)
   private[queries] def isPlanOnly: Boolean = planOnlyFlag.value
 
-  def withCached(cached: DataFrame*)(result: => DataFrame): DataFrame =
-    if (planOnlyFlag.value) result
+  private sealed trait Regime
+  private case object Local extends Regime
+  private case object Reliable extends Regime
+  private case object Lineage extends Regime
+
+  /** The deployment-regime decision (table above). Every session of
+    * one application shares its SparkContext, so child sessions decide
+    * like their parent. */
+  private def regimeOf(s: SparkSession): Regime = {
+    val sc = s.sparkContext
+    if (sc.isLocal) Local
+    else if (sc.getCheckpointDir.nonEmpty) Reliable
+    else Lineage
+  }
+
+  /** True when a [[share]] scope materializes its result: not under
+    * [[planOnly]], and not in the Lineage regime, where scopes return
+    * lazy plans that still read their sources. */
+  private[queries] def materializes(s: SparkSession): Boolean =
+    !planOnlyFlag.value && regimeOf(s) != Lineage
+
+  /** Eager lineage truncation, the regime's way (table above). */
+  private def truncate(df: DataFrame, regime: Regime): DataFrame = regime match {
+    case Local => df.localCheckpoint(true)
+    case Reliable => df.checkpoint(true)
+    case Lineage =>
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      df.count()
+      df
+  }
+
+  /** Shares `inputs` across the subtrees of `body` for one query:
+    * `share(a, b) { a.join(b, ...) }`.
+    *
+    *  1. Before `body` is built, the inputs are cached, so driver
+    *     actions inside `body` and every subtree of its result read
+    *     the scope.
+    *  2. The result is materialized while the scope is alive, so the
+    *     returned plan no longer references the inputs.
+    *  3. The inputs are released in a `finally`.
+    *  4. Under [[planOnly]] and in the Lineage regime, `body` runs over
+    *     the raw inputs and its lazy plan is returned; nothing is kept.
+    */
+  def share(inputs: DataFrame*)(body: => DataFrame): DataFrame = {
+    val s = inputs.head.sparkSession
+    if (!materializes(s)) body
     else {
-      val r = result // plan construction only; nothing executes yet
-      val sc = r.sparkSession.sparkContext
-      val reliableDir = sc.getCheckpointDir
-      if (!sc.isLocal && reliableDir.isEmpty) r
-      else {
-        cached.foreach(_.cache())
-        try if (sc.isLocal) r.localCheckpoint(true) else r.checkpoint(true)
-        finally cached.foreach(_.unpersist(blocking = false))
-      }
+      inputs.foreach(_.cache())
+      try truncate(body, regimeOf(s))
+      finally inputs.foreach(_.unpersist(blocking = false))
     }
+  }
+
+  /** [[share]] whose input is materialized once through
+    * [[materializeRound]] before `body` is built, instead of lazily
+    * cached; `body` receives the materialized frame, which is released
+    * through [[releaseRound]] in a `finally`. Same steps 2 and 4.
+    *
+    * Which form a query uses is a per-query measured choice, not a
+    * user option. A lazy `.cache()` lets AQE's concurrent broadcast
+    * builds each re-derive the input before the first writer populates
+    * the cache (eager won for q_dedup_prefixjoin and q_agg_kmv); where
+    * a single consumer reads the input, the eager write costs more
+    * than it saves (it lost for q_dedup_minhash). */
+  def shareEager(input: DataFrame)(body: DataFrame => DataFrame): DataFrame = {
+    val s = input.sparkSession
+    if (!materializes(s)) body(input)
+    else {
+      val shared = materializeRound(input)
+      try truncate(body(shared), regimeOf(s))
+      finally releaseRound(shared)
+    }
+  }
 
   /** Deployment-aware loop-round materialization — the ONE primitive
     * every iterative dataflow (kcore/ktruss/BFS peel rounds, label
-    * propagation) must use instead of calling `localCheckpoint`
-    * directly. Each round's plan embeds the previous round's (often
-    * twice), so without eager lineage truncation both the logical tree
-    * and per-action analysis time grow exponentially in the round
-    * count; but the RIGHT truncation depends on where the job runs:
+    * propagation) uses instead of calling `localCheckpoint` directly.
+    * Each round's plan embeds the previous round's (often twice), so
+    * without eager lineage truncation both the logical tree and
+    * per-action analysis time grow exponentially in the round count.
+    * The mechanism is the regime's (table above); in the Lineage
+    * regime a lost block recomputes from source — slower, never
+    * wrong — but the logical plan still grows with rounds. Loops call
+    * [[releaseRound]] on a round's frames once the next round is
+    * materialized and counted, so round state never outlives its use.
     *
-    *   - local master: `localCheckpoint(eager)` — blocks live in the
-    *     one JVM; executor loss is process death anyway.
-    *   - cluster master with a checkpoint dir: reliable
-    *     `checkpoint(eager)` — `localCheckpoint` would tie round-state
-    *     blocks to executor liveness, and one preempted/lost executor
-    *     then kills an hours-long loop with NO recompute path
-    *     (truncated lineage). Spark's docs warn against exactly this.
-    *   - cluster master without a checkpoint dir: persist
-    *     (memory-and-disk) + eager materialize. Lineage is NOT
-    *     truncated, so a lost block recomputes from source — slower,
-    *     never wrong; the logical plan still grows with rounds, which
-    *     is why deployments should set a checkpoint dir (SCALE.md).
-    *     Loops call [[releaseRound]] on a round's frames once the next
-    *     round is materialized and counted, so persisted round state
-    *     never outlives its use (no-op in the checkpoint branches,
-    *     where the ContextCleaner reference-tracks checkpoint RDDs).
-    *
-    * Unlike [[withCached]], this is NOT disabled under [[planOnly]]:
-    * plan guards on iterative queries assert on per-round trees whose
+    * Unlike [[share]], this is NOT disabled under [[planOnly]]: plan
+    * guards on iterative queries assert on per-round trees whose
     * inputs are already materialized, and skipping truncation would
     * both change those trees and re-introduce the exponential analysis
     * blowup inside the guard itself.
     */
   def materializeRound(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    val out =
-      if (sc.isLocal) df.localCheckpoint(true)
-      else if (sc.getCheckpointDir.nonEmpty) df.checkpoint(true)
-      else {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-        df
-      }
+    val out = truncate(df, regimeOf(df.sparkSession))
     roundsMaterialized.incrementAndGet()
     out
   }
@@ -105,33 +162,27 @@ object Scoped {
     * in this JVM. Lets a fault-injection harness trigger DETERMINISTIC
     * mid-loop events ("kill an executor once round 1 is on disk")
     * instead of polling the checkpoint dir — a file-appearance trigger
-    * shifts under host load and made the recovery gate flaky
-    * (round-12 verdict item 1). One relaxed increment per loop round;
-    * zero cost on the query path. */
+    * shifts under host load and made the recovery gate flaky. One
+    * relaxed increment per loop round; zero cost on the query path. */
   val roundsMaterialized = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Drop a finished round's state. Three materialization regimes,
-    * three releases:
-    *   - cache-only branch: `unpersist` drops the CacheManager entry.
-    *   - localCheckpoint branch: `unpersist` is a CacheManager no-op;
-    *     the one-JVM blocks are reference-tracked by the
-    *     ContextCleaner (CacheSpec pins baseline return).
-    *   - reliable-checkpoint branch: the ContextCleaner deletes
-    *     checkpoint FILES only under
-    *     `spark.cleaner.referenceTracking.cleanCheckpoints=true`
-    *     (default false), so an hours-long loop would otherwise grow
-    *     the checkpoint dir linearly in rounds. The loop contract —
-    *     release a round only after the NEXT round is materialized,
-    *     which truncates lineage — guarantees no live plan references
-    *     this round's files, so they are deleted eagerly here.
-    *     Deletion is root-matched: only frames that ARE a
-    *     [[materializeRound]] output (analyzed plan = the checkpoint's
-    *     LogicalRDD) qualify; a derived frame is never stripped of a
-    *     checkpoint it still reads. */
+  /** Drops a finished round's state. `unpersist` drops the Lineage
+    * regime's CacheManager entry (a no-op for checkpointed frames,
+    * whose blocks the ContextCleaner reference-tracks). In the Reliable
+    * regime the ContextCleaner deletes checkpoint FILES only under
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
+    * false), so an hours-long loop would otherwise grow the checkpoint
+    * dir linearly in rounds. The loop contract — release a round only
+    * after the NEXT round is materialized, which truncates lineage —
+    * guarantees no live plan references this round's files, so they
+    * are deleted eagerly here. Deletion is root-matched: only frames
+    * that ARE a [[materializeRound]] output (analyzed plan = the
+    * checkpoint's LogicalRDD) qualify; a derived frame is never
+    * stripped of a checkpoint it still reads. */
   def releaseRound(dfs: DataFrame*): Unit =
     dfs.foreach { df =>
       df.unpersist(blocking = false)
-      df.queryExecution.analyzed match {
+      if (regimeOf(df.sparkSession) == Reliable) df.queryExecution.analyzed match {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
           l.rdd.getCheckpointFile.foreach { p =>
             // best-effort: a failed delete degrades to the documented
@@ -150,91 +201,38 @@ object Scoped {
       }
     }
 
+  /** AQE `minPartitionSize` of [[coalesceFloorSession]]. */
+  private val FloorMinPartitionSize = "64k"
+
   /** Child session carrying a per-QUERY AQE partition-coalescing
-    * floor (optimization round 17, guide §2.2; the round-16 verdict's
-    * "scope the measured minPartitionSize win to the queries that want
-    * it"). AQE's default 1 MB `minPartitionSize` coalesces any small
+    * floor. AQE's default 1 MB `minPartitionSize` coalesces any small
     * exchange to ONE partition — correct for the latency-bound
-    * inventory tail (a GLOBAL 64k floor lost its 16-query A/B in
-    * round 16), but it serializes the few queries whose small-byte
-    * exchanges carry heavy per-row CPU (q_agg_kmv's digest passes,
-    * q_dedup_prefixjoin's candidate/verification joins: 3.4 s of task
-    * time squeezed into 5 tasks). Spark reads SQLConf from the
+    * inventory tail (a GLOBAL 64k floor lost its 16-query A/B), but it
+    * serializes the few queries whose small-byte exchanges carry heavy
+    * per-row CPU (q_agg_kmv's digest passes: seconds of task time
+    * squeezed into a handful of tasks). Spark reads SQLConf from the
     * DataFrame's OWN session at execution, so a child session scopes
     * the floor to exactly one query with zero effect on the rest of
     * the inventory — the same isolation pattern the streaming family
     * uses for its state-partition count. At real scale these
     * exchanges exceed the default floor and AQE keeps them parallel
-    * anyway, so the floor only matters where the digest is small
-    * relative to its CPU — it is a per-row-cost correction, not a
-    * local-mode tune; SPARK_GRAFT_Q_FLOOR=off kills it for A/Bs.
-    * Child sessions are a few conf maps, collected with the reference
-    * (the streaming scaladoc's argument). */
-  private val floorSessions = new java.util.concurrent.ConcurrentHashMap[
-    org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]()
+    * anyway, so the floor is a per-row-cost correction, not a
+    * local-mode tune.
+    *
+    * Memoized per parent: a FRESH child per invocation measured ~1.5 s
+    * of repeated per-session warmup. The map has weak keys, and a
+    * child from `newSession()` holds no reference to its parent, so a
+    * dropped parent and its child are collectable. The child's SQLConf
+    * starts from the SparkContext's conf: runtime `conf.set` calls on
+    * the parent do not reach it. */
+  private val floorSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
 
-  def coalesceFloorSession(parent: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = {
-    val floor = sys.env.getOrElse("SPARK_GRAFT_Q_FLOOR", "64k")
-    if (floor == "off") parent
-    // memoized per parent: a FRESH child session per invocation
-    // measured ~1.5 s of repeated per-session warmup (fon legs 3.77 s
-    // vs 2.34-2.60 without; a no-op-floor child read 4.14 s — the cost
-    // is the session, not the floor), so the child is created once and
-    // shared by every invocation against the same parent
-    else floorSessions.computeIfAbsent(parent, { p =>
+  def coalesceFloorSession(parent: SparkSession): SparkSession =
+    floorSessions.computeIfAbsent(parent, { p =>
       val s = p.newSession()
-      s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", floor)
+      s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        FloorMinPartitionSize)
       s
     })
-  }
-
-  /** [[withCached]] with an EAGERLY materialized shared input
-    * (optimization round 17, guide §2.4/§5): `.cache()` is lazy, so
-    * when AQE launches a query's broadcast-exchange builds
-    * concurrently, EVERY build re-evaluates the shared frame before
-    * the first writer populates the cache — JobProbe attributed eight
-    * duplicate ~240 ms scan+explode jobs inside one q_dedup_prefixjoin
-    * invocation (and a duplicate 375 KB corpus-digest build inside
-    * q_agg_kmv) to exactly this race; the BlockManager "block already
-    * exists, not re-adding" warnings are its signature. Materializing
-    * the input ONCE up front (deployment-aware, via
-    * [[materializeRound]]) makes every downstream subtree — broadcast
-    * builds included — scan the materialized blocks instead of
-    * re-deriving them. The result is materialized like [[withCached]]
-    * and the input released afterwards; under [[planOnly]] the raw
-    * lazy plan flows through untouched so plan guards see the real
-    * operator tree. */
-  def withMaterialized(input: DataFrame)(body: DataFrame => DataFrame): DataFrame =
-    if (planOnlyFlag.value) body(input)
-    // measurement kill-switch (same posture as SPARK_GRAFT_SPREAD):
-    // =0 degrades to the plain lazy-cache scope for same-binary A/Bs
-    else if (sys.env.get("SPARK_GRAFT_MAT").contains("0"))
-      withCached(input)(body(input))
-    else {
-      val m = materializeRound(input)
-      try materializeRound(body(m)) finally releaseRound(m)
-    }
-
-  /** Variant for bodies that RUN driver actions against the cached
-    * inputs while constructing the result — e.g. the iterative model
-    * fits, which collect a tiny model once per Lloyd round. Caches
-    * BEFORE evaluating `result` so those per-round actions hit the
-    * cache, then materializes and releases exactly like [[withCached]].
-    * This puts the whole fit-plus-downstream lifetime under ONE owner:
-    * the fit itself never caches or unpersists, so it cannot evict a
-    * cache scope the caller established. */
-  def withCachedEager(cached: DataFrame*)(result: => DataFrame): DataFrame =
-    if (planOnlyFlag.value) result
-    else {
-      val sc = cached.head.sparkSession.sparkContext
-      val scoped = sc.isLocal || sc.getCheckpointDir.nonEmpty
-      if (scoped) cached.foreach(_.cache())
-      try {
-        val r = result
-        if (!scoped) r
-        else if (sc.isLocal) r.localCheckpoint(true)
-        else r.checkpoint(true)
-      } finally if (scoped) cached.foreach(_.unpersist(blocking = false))
-    }
 }

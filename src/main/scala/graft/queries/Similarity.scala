@@ -91,7 +91,7 @@ object Similarity {
     val pairs = cands.join(broadcast(anchors), col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id"), col("lang"),
         floor(cosine(col("qv"), col("embedding")) * 1e6).cast("long").as("ci"))
-    Scoped.withCached(pairs) {
+    Scoped.share(pairs) {
       val xs = pairs.select(col("qid"), col("vec_id"), col("ci").cast("double"))
         .as[(Long, Long, Double)]
         .mapPartitions(partialTopK[(Long, Long, Double)](_, BTX_K, _._1,
@@ -676,7 +676,7 @@ object Similarity {
       .select(col("vec_id"), col("q"), col("qnorm"), col("bands"))
     // scoped cache: quantized vectors are 4× smaller; reused by all
     // three roles, released when the result is materialized
-    Scoped.withCached(e) {
+    Scoped.share(e) {
       val bands = e.select(col("vec_id"), explode(col("bands")).as("bs"))
         .select(col("vec_id"), col("bs.band_id").as("band_id"), col("bs.bv").as("bv"))
       val cand = bands.as("a").join(bands.as("b"),
@@ -772,7 +772,7 @@ object Similarity {
     * round is ONE distributed pass — broadcast-literal assign, argmin
     * carrying q (no corpus re-join), partial-agg shuffle to K rows.
     * CACHING IS THE CALLER'S: the per-round actions re-execute `vecs`
-    * unless the caller holds it cached (Scoped.withCachedEager wraps
+    * unless the caller holds it cached (Scoped.share wraps
     * fit + downstream use in one scope), and the fit never unpersists —
     * so it cannot evict a cache scope it does not own. */
   private[graft] def kmeansFit(vecs: DataFrame): DataFrame =
@@ -854,7 +854,7 @@ object Similarity {
     // cent is a driver-local relation (kmeansFit collects the tiny
     // model per round), so the corpus assignment and the query probes
     // each broadcast a literal — the fit never re-executes.
-    Scoped.withCachedEager(vecs) {
+    Scoped.share(vecs) {
       val cent = kmeansFit(vecs)
       val cells = kmeansAssign(vecs, cent)
       val corpus = vecs.select(col("vec_id"), col("embedding")).join(cells, "vec_id")
@@ -992,7 +992,7 @@ object Similarity {
     * carrying sq (no corpus re-join), partial-agg shuffle to M·K rows. */
   private[graft] def pqFit(sv: DataFrame): DataFrame = {
     // caching is the caller's (see kmeansFit): wrap fit + downstream in
-    // one Scoped.withCachedEager scope
+    // one Scoped.share scope
     val hk = graft.functions.GraftFunctions.hash28(col("vec_id").cast("string"))
     val seeds = sv.select(col("vec_id")).distinct()
         .select(col("vec_id"), hk.as("hk"))
@@ -1034,7 +1034,7 @@ object Similarity {
     // cb is a driver-local relation (pqFit collects the tiny codebook
     // per round): the corpus encode and the query distance tables each
     // broadcast a literal — the fit never re-executes.
-    Scoped.withCachedEager(sv) {
+    Scoped.share(sv) {
       val cb = pqFit(sv)
       val codes = pqAssign(sv, cb)
       // distance-table columns renamed up front: both sides derive from
@@ -1081,7 +1081,7 @@ object Similarity {
     * corpus never shuffles. */
   val qEmbedPqdist: Q = (s, d) => {
     val sv = pqSubvecs(s, d)
-    Scoped.withCachedEager(sv) {
+    Scoped.share(sv) {
       val cb = pqFit(sv)
       val codes = pqAssign(sv, cb)
       sv.join(codes, Seq("vec_id", "m"))
@@ -1122,7 +1122,7 @@ object Similarity {
     * partial-agg rollup. */
   val qAnnRq: Q = (s, d) => {
     val vecs = quantizedVecs(s, d).select(col("vec_id"), col("q"))
-    Scoped.withCachedEager(vecs) {
+    Scoped.share(vecs) {
       val c1 = kmeansFit(vecs)
       val withC1 = vecs.join(kmeansAssign(vecs, c1), "vec_id")
         .join(broadcast(c1), col("cell") === col("cid"))
@@ -1136,7 +1136,7 @@ object Similarity {
         zip_with(col("q"), col("c"),
           (x, cv) => floor((x * lit(1000L) - cv) / lit(1000.0)).cast("long"))
           .as("q"))
-      Scoped.withCachedEager(rvecs) {
+      Scoped.share(rvecs) {
         val c2 = kmeansFit(rvecs)
         val withC2 = rvecs.join(kmeansAssign(rvecs, c2), "vec_id")
           .join(broadcast(c2), col("cell") === col("cid"))
@@ -1220,7 +1220,7 @@ object Similarity {
   val qAnnRerank: Q = (s, d) => {
     import s.implicits._
     val sv = pqSubvecs(s, d)
-    Scoped.withCachedEager(sv) {
+    Scoped.share(sv) {
       val cb = pqFit(sv)
       val codes = pqAssign(sv, cb)
       val dt = sv.where(col("vec_id") < PQ_NQ)
@@ -1321,7 +1321,7 @@ object Similarity {
   val qAnnOpq: Q = (s, d) => {
     import s.implicits._
     val sv = pqSubvecsOf(opqRotatedVecs(s, d))
-    Scoped.withCachedEager(sv) {
+    Scoped.share(sv) {
       val cb = pqFit(sv)
       val codes = pqAssign(sv, cb)
       val dt = sv.where(col("vec_id") < PQ_NQ)
@@ -1379,7 +1379,7 @@ object Similarity {
     import s.implicits._
     val vecs = vecsIn
     val sv = svIn
-    Scoped.withCachedEager(vecs, sv) {
+    Scoped.share(vecs, sv) {
       // The two fits are independent (coarse cells over q, codebooks
       // over sq) and each is a chain of small driver-synchronized
       // rounds — run them on CONCURRENT driver threads so their jobs
@@ -1474,16 +1474,16 @@ object Similarity {
     * exposed for SimilarityBoundSpec's cell-width pin. */
   private[graft] def semDedupCellsOf(s: SparkSession, d: String): DataFrame = {
     val vecs = quantizedVecs(s, d)
-    Scoped.withCachedEager(vecs) {
-      // no extra checkpoint here: withCachedEager already materializes
-      // the result with the deployment-correct mechanism
+    Scoped.share(vecs) {
+      // no extra checkpoint here: share already materializes the
+      // result with the deployment-correct mechanism
       kmeansAssign(vecs, kmeansFitK(vecs, semDedupK(vecs.count())))
     }
   }
 
   val qSemDedup: Q = (s, d) => {
     val vecs = quantizedVecs(s, d)
-    Scoped.withCachedEager(vecs) {
+    Scoped.share(vecs) {
       val cent = kmeansFitK(vecs, semDedupK(vecs.count()))
       val cells = kmeansAssign(vecs, cent)
       val e = vecs.select(col("vec_id"), col("embedding")).join(cells, "vec_id")
@@ -1616,7 +1616,7 @@ object Similarity {
   val qSelectKcenter: Q = (s, d) => {
     import s.implicits._
     val vecs = quantizedVecs(s, d).select(col("vec_id"), col("q"))
-    graft.queries.Scoped.withCached(vecs) {
+    graft.queries.Scoped.share(vecs) {
       val seed = vecs.orderBy(col("vec_id").asc).limit(1).head()
       val seedId = seed.getLong(0)
       val seedQ = seed.getSeq[Long](1).toArray
@@ -1666,7 +1666,7 @@ object Similarity {
     val tf = Tables.spread(Tables.documents(s, d), "doc_id")
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-    Scoped.withCached(tf) {
+    Scoped.share(tf) {
       val norms = tf.groupBy("doc_id").agg(sum(col("tf") * col("tf")).as("n2"))
       val df = tf.groupBy("tok").agg(count(lit(1)).as("df_docs"))
       val rare = tf.join(df.where(col("df_docs") <= SPARSE_RARE_DF), "tok")

@@ -274,7 +274,7 @@ object TextAnalysis {
       .select(explode(tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).cast("long").as("freq"))
       .withColumn("sym", trim(regexp_replace(col("word"), "(.)", "$1 ")))
-    Scoped.withCachedEager(vocab0) {
+    Scoped.share(vocab0) {
       import s.implicits._
       bpeFit(vocab0)._2.toDF("round", "pair", "merged", "cnt").orderBy("round")
     }
@@ -303,7 +303,7 @@ object TextAnalysis {
       .groupBy("lang", "word").agg(count(lit(1)).cast("long").as("freq"))
     val vocab0 = byLang.groupBy("word").agg(sum("freq").cast("long").as("freq"))
       .withColumn("sym", trim(regexp_replace(col("word"), "(.)", "$1 ")))
-    Scoped.withCachedEager(byLang, vocab0) {
+    Scoped.share(byLang, vocab0) {
       val (vocabR, _) = bpeFit(vocab0)
       val toks = vocabR.select(col("word"),
         size(split(col("sym"), " ")).cast("long").as("n_sym"),
@@ -396,7 +396,7 @@ object TextAnalysis {
     val counts = Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
-    graft.queries.Scoped.withCached(counts) {
+    graft.queries.Scoped.share(counts) {
       val tot = counts.agg(sum("c").cast("long").as("t"))
       val stats = counts.crossJoin(broadcast(tot))
         .agg(count(lit(1)).as("n_keys"),
@@ -482,7 +482,7 @@ object TextAnalysis {
       .groupBy("tok").agg(count(lit(1)).as("c"))
     // scoped cache: feeds the sketch build, the top-k pick and the
     // scoring join; released once the result is materialized
-    Scoped.withCached(tokCounts) {
+    Scoped.share(tokCounts) {
     def jb(j: Int): Column = struct(lit(j).as("j"),
       (hash28(concat(lit(j.toString), lit("_"), col("tok"))) % W).as("b"))
     val sketch = tokCounts
@@ -613,7 +613,7 @@ object TextAnalysis {
       .where(col("phrase") =!= "")
       .withColumn("w", split(col("phrase"), " +"))
       .where(size(col("w")) <= RAKE_MAXLEN)
-    Scoped.withCached(phrases) {
+    Scoped.share(phrases) {
       val wstat = phrases
         .select(explode(col("w")).as("word"), (size(col("w")) - 1).cast("long").as("dl"))
         .groupBy("word")
@@ -730,7 +730,7 @@ object TextAnalysis {
         |  i -> struct(element_at(w, i) AS a, element_at(w, i + 1) AS b))"""
         .stripMargin)).as("p"))
       .select(col("p.a").as("w1"), col("p.b").as("w2"))
-    Scoped.withCached(pairs) {
+    Scoped.share(pairs) {
       val k = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("k11"))
       val ma = pairs.groupBy("w1").agg(count(lit(1)).as("ca"))
       val mb = pairs.groupBy("w2").agg(count(lit(1)).as("cb"))
@@ -835,10 +835,10 @@ object TextAnalysis {
     // and the broadcast threshold picks the join strategy either way.
     val items = Tables.documents(s, d)
       .select(col("doc_id"), explode(shingles(tokens(col("text")), 2)).as("item"))
-    Scoped.withCached(items) {
+    Scoped.share(items) {
       val n = items.agg(countDistinct("doc_id").as("n_docs"))
       val supp = items.groupBy("item").agg(count(lit(1)).as("supp"))
-      Scoped.withCached(supp) {
+      Scoped.share(supp) {
         val mx = supp.agg(max("supp").as("max_supp"))
         val f1 = supp.crossJoin(broadcast(mx))
           .where(col("supp") * 10 >= col("max_supp") * ITEMSET_F1_PCT10)

@@ -243,6 +243,30 @@ class PlanSpec extends AnyFunSuite {
       "salted join must stay a shuffle join for the skew demo")
   }
 
+  test("KN scorers broadcast their word tables only within the broadcast threshold") {
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // the word-keyed statistics joins: left/right (u1/u2) of the bigram
+    // scorers, mid/uni (m2/q3) of the trigram scorer
+    val wordKeys = Set("u1", "u2", "m2", "q3")
+    def wordBroadcasts(name: String): Set[String] =
+      SparkEntry.queries(name)(spark, SF).queryExecution.sparkPlan.collect {
+        case j: BroadcastHashJoinExec =>
+          (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name)).filter(wordKeys)
+      }.flatten.toSet
+    val kn = Map("q_quality_kn" -> Set("u1", "u2"), "q_quality_kn_mod" -> Set("u1", "u2"),
+      "q_quality_kn_tri" -> Set("m2", "q3"))
+    // tiny vocabulary: within the default threshold, every word table broadcasts
+    kn.foreach { case (q, keys) =>
+      assert(wordBroadcasts(q) == keys, s"$q should broadcast its word tables")
+    }
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try kn.keys.foreach { q =>
+      assert(wordBroadcasts(q).isEmpty,
+        s"$q broadcast a word table with broadcasts disabled (threshold -1)")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
   test("custom TopKPerKey operator engages on the inventory's per-group top-k") {
     graft.plans.TopKPerKeyPlans.install(spark)
     try {

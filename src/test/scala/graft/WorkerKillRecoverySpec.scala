@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import scala.sys.process._
-
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Executor-loss recovery for the iterative loops (round-12 verdict
@@ -30,22 +28,8 @@ class WorkerKillRecoverySpec extends AnyFunSuite {
     assert(expected.nonEmpty)
 
     val ckpt = Files.createTempDirectory("graft-kcore-ckpt")
-    val out = new StringBuilder
-    val cmd = Seq("java") ++
-      Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-        "java.net", "java.nio", "java.util", "java.util.concurrent",
-        "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-        "sun.security.action", "sun.util.calendar")
-        .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED")) ++
-      Seq("-Xmx2g", "-cp", sys.props("java.class.path"),
-        "org.apache.spark.deploy.KcoreRecoveryProbe",
-        sfDir, ckpt.toString)
-    val code = Process(cmd, None,
-      "SPARK_HOME" -> "/opt/spark", "SPARK_SCALA_VERSION" -> "2.13") !
-      ProcessLogger(
-        l => { out.append(l).append('\n'); () },
-        l => { out.append(l).append('\n'); () })
-    val text = out.toString
+    val (code, text) = org.apache.spark.deploy.MiniClusterProbe.runProbe(
+      "org.apache.spark.deploy.KcoreRecoveryProbe", "2g", sfDir, ckpt.toString)
     assert(code == 0, s"probe failed:\n${text.takeRight(4000)}")
     val rows = "(?m)^ROW=([^\\s]+)".r.findAllMatchIn(text).map(_.group(1)).toSeq
     assert(rows == expected,
@@ -80,7 +64,7 @@ class WorkerKillRecoverySpec extends AnyFunSuite {
       s"labelprop on the post-kill cluster diverged: got ${lpRows.size} rows, expected ${lpExpected.size}")
     // Scoped.releaseRound must delete released rounds' reliable
     // checkpoint files eagerly (the ContextCleaner only would under
-    // cleanCheckpoints=true); only each query's final withCached
+    // cleanCheckpoints=true); only each query's final Scoped.share
     // result checkpoint may remain (kcore + ktruss + labelprop = 3)
     val ckptLeft = "CKPT_DIRS_LEFT=(\\d+)".r.findFirstMatchIn(text).map(_.group(1).toInt)
     assert(ckptLeft.exists(_ <= 3),

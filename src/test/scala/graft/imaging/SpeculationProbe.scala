@@ -3,7 +3,6 @@ package graft.imaging
 import java.nio.file.Paths
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
 
 import graft.core.JobSettings
 
@@ -18,42 +17,24 @@ import graft.core.JobSettings
 object SpeculationProbe {
   def main(args: Array[String]): Unit = {
     val Array(stackDir, inputRoot, outDir, zarrFormat) = args
-    val classes = sys.props("java.class.path")
-      .split(":").filter(_.contains("target/scala-")).mkString(":")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
     // two standalone workers under DIFFERENT host strings — a
     // speculative clone only dequeues onto a host with no attempt of
     // the task, which local-cluster's same-hostname workers never offer
     val (masterUrl, clusterEnvs) = org.apache.spark.deploy.MiniClusterProbe
       .start(new org.apache.spark.SparkConf(false), 2, 1024)
-    val spark = SparkSession.builder()
-      .master(masterUrl)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.executor.extraClassPath", classes)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.speculation", "true")
-      .config("spark.speculation.interval", "5ms")
-      .config("spark.speculation.multiplier", "1.0")
-      .config("spark.speculation.quantile", "0.0")
-      .config("spark.speculation.minTaskRuntime", "0ms")
+    val spark = org.apache.spark.deploy.MiniClusterProbe.session(masterUrl, 8,
+      "spark.speculation" -> "true",
+      "spark.speculation.interval" -> "5ms",
+      "spark.speculation.multiplier" -> "1.0",
+      "spark.speculation.quantile" -> "0.0",
+      "spark.speculation.minTaskRuntime" -> "0ms",
       // efficiency-aware speculation (default on since 3.4) suppresses
       // clones of tasks with healthy process rates — the point here is
       // to FORCE duplicates, so turn it off and add the slot-surplus
       // duration trigger as a second path
-      .config("spark.speculation.efficiency.enabled", "false")
-      .config("spark.speculation.task.duration.threshold", "50ms")
-      .config("spark.locality.wait", "0ms")
-      .getOrCreate()
+      "spark.speculation.efficiency.enabled" -> "false",
+      "spark.speculation.task.duration.threshold" -> "50ms",
+      "spark.locality.wait" -> "0ms")
     val speculative = new java.util.concurrent.atomic.AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskStart(t: SparkListenerTaskStart): Unit =

@@ -3,7 +3,6 @@ package graft.imaging
 import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
-import scala.sys.process._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -70,25 +69,11 @@ class SpeculationSpec extends AnyFunSuite {
     assert(expected.nonEmpty)
 
     val specOut = Files.createTempDirectory("graft-spec-spec")
-    val out = new StringBuilder
-    val cmd = Seq("java") ++
-      Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-        "java.net", "java.nio", "java.util", "java.util.concurrent",
-        "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-        "sun.security.action", "sun.util.calendar")
-        .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED")) ++
-      Seq("-Xmx2g", "-cp", sys.props("java.class.path"),
-        "graft.imaging.SpeculationProbe",
-        stack.toString, root.toString, specOut.toString, "3")
-    // SPARK_SCALA_VERSION: the standalone worker's executor launcher
-    // cannot infer it outside a spark-submit context
-    val code = Process(cmd, None,
-      "SPARK_HOME" -> "/opt/spark", "SPARK_SCALA_VERSION" -> "2.13") !
-      ProcessLogger(
-      l => { out.append(l).append('\n'); () },
-      l => { out.append(l).append('\n'); () })
-    assert(code == 0, s"probe failed:\n${out.toString.takeRight(4000)}")
-    val spec = "SPECULATIVE=(\\d+)".r.findFirstMatchIn(out.toString)
+    val (code, text) = org.apache.spark.deploy.MiniClusterProbe.runProbe(
+      "graft.imaging.SpeculationProbe", "2g",
+      stack.toString, root.toString, specOut.toString, "3")
+    assert(code == 0, s"probe failed:\n${text.takeRight(4000)}")
+    val spec = "SPECULATIVE=(\\d+)".r.findFirstMatchIn(text)
       .map(_.group(1).toInt)
     assert(spec.isDefined, "probe did not report a speculative count")
     assert(spec.get > 0,

@@ -3,7 +3,6 @@ package graft.imaging
 import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
-import scala.sys.process._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -68,22 +67,9 @@ class WriteKillRecoverySpec extends AnyFunSuite {
     assert(expected.nonEmpty)
 
     val killedOut = Files.createTempDirectory("graft-writekill-out")
-    val out = new StringBuilder
-    val cmd = Seq("java") ++
-      Seq("java.lang", "java.lang.invoke", "java.lang.reflect", "java.io",
-        "java.net", "java.nio", "java.util", "java.util.concurrent",
-        "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
-        "sun.security.action", "sun.util.calendar")
-        .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED")) ++
-      Seq("-Xmx2g", "-cp", sys.props("java.class.path"),
-        "org.apache.spark.deploy.WriteKillProbe",
-        stack.toString, root.toString, killedOut.toString)
-    val code = Process(cmd, None,
-      "SPARK_HOME" -> "/opt/spark", "SPARK_SCALA_VERSION" -> "2.13") !
-      ProcessLogger(
-        l => { out.append(l).append('\n'); () },
-        l => { out.append(l).append('\n'); () })
-    val text = out.toString
+    val (code, text) = org.apache.spark.deploy.MiniClusterProbe.runProbe(
+      "org.apache.spark.deploy.WriteKillProbe", "2g",
+      stack.toString, root.toString, killedOut.toString)
     assert(code == 0, s"probe failed:\n${text.takeRight(4000)}")
     val removed = "REMOVED=(\\d+)".r.findFirstMatchIn(text).map(_.group(1).toInt)
     assert(removed.exists(_ > 0),

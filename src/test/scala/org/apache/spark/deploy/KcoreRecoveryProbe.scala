@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.SparkConf
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved}
-import org.apache.spark.sql.SparkSession
 
 /** Subprocess main for WorkerKillRecoverySpec: runs the iterative
   * q_graph_kcore on a standalone two-worker mini-cluster with a
@@ -24,28 +23,10 @@ import org.apache.spark.sql.SparkSession
 object KcoreRecoveryProbe {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, ckptDir) = args
-    val classes = sys.props("java.class.path")
-      .split(":").filter(_.contains("target/scala-")).mkString(":")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
     val (masterUrl, clusterEnvs) =
       MiniClusterProbe.start(new SparkConf(false), 2, 1024)
-    val spark = SparkSession.builder()
-      .master(masterUrl)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.executor.extraClassPath", classes)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.locality.wait", "0ms")
-      .getOrCreate()
+    val spark = MiniClusterProbe.session(masterUrl, 8,
+      "spark.locality.wait" -> "0ms")
     val sc = spark.sparkContext
     sc.setCheckpointDir(ckptDir)
     val removed = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -125,7 +106,7 @@ object KcoreRecoveryProbe {
     // released rounds must not leave reliable checkpoint files behind
     // (Scoped.releaseRound deletes them eagerly; the ContextCleaner
     // would only do so under cleanCheckpoints=true). Only each query's
-    // final withCached result checkpoint may remain — one for kcore,
+    // final Scoped.share result checkpoint may remain — one for kcore,
     // ktruss, and labelprop apiece.
     val ckpt = Paths.get(ckptDir)
     val leftover = { // layout: ckptDir/<session-uuid>/rdd-<id>/part-*

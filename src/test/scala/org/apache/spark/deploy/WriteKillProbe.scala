@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.{SparkConf, Success}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorRemoved, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import graft.core.JobSettings
 import graft.imaging.SmartSpimJob
@@ -29,28 +28,10 @@ import graft.imaging.SmartSpimJob
 object WriteKillProbe {
   def main(args: Array[String]): Unit = {
     val Array(stackDir, inputRoot, outDir) = args
-    val classes = sys.props("java.class.path")
-      .split(":").filter(_.contains("target/scala-")).mkString(":")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .map(p => s"--add-opens $p=ALL-UNNAMED").mkString(" ")
     val (masterUrl, clusterEnvs) =
       MiniClusterProbe.start(new SparkConf(false), 2, 1024)
-    val spark = SparkSession.builder()
-      .master(masterUrl)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.executor.extraClassPath", classes)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.locality.wait", "0ms")
-      .getOrCreate()
+    val spark = MiniClusterProbe.session(masterUrl, 8,
+      "spark.locality.wait" -> "0ms")
     val sc = spark.sparkContext
     val removed = new java.util.concurrent.atomic.AtomicInteger(0)
     val failed = new java.util.concurrent.atomic.AtomicInteger(0)
