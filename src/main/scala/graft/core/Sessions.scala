@@ -34,4 +34,24 @@ object Sessions {
     if (topK) graft.plans.TopKPerKeyPlans.install(spark)
     spark
   }
+
+  /** A child of `parent` for per-query settings: shared SparkContext and
+    * cached data, its own SQLConf with `conf` set, and the parent's
+    * planner rules. A bare `newSession()` starts with empty
+    * `experimental` rules, so without the copy a query on the child
+    * silently loses the top-k operator. */
+  def child(parent: SparkSession, conf: (String, String)*): SparkSession = {
+    val s = parent.newSession()
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    inheritRules(parent, s)
+  }
+
+  /** Copy `parent`'s extra optimizer rules and strategies onto `child`.
+    * A memoized child calls this on every reuse, so a later install or
+    * uninstall on the parent reaches it. */
+  def inheritRules(parent: SparkSession, child: SparkSession): SparkSession = {
+    child.experimental.extraOptimizations = parent.experimental.extraOptimizations
+    child.experimental.extraStrategies = parent.experimental.extraStrategies
+    child
+  }
 }

@@ -100,6 +100,9 @@ object SmartSpimJob {
     val compressed = settings.compressorName == "blosc"
     val chunk = settings.chunkSize
     val outDir = settings.outputDirectory
+    val layout = ZarrStore.Layout(settings.zarrFormat, chunk, settings.shardGrid,
+      settings.compressorLevel, settings.byteShuffle, compressed,
+      settings.compressorCname)
 
     // per-stack validation + full-res shape probe (reference S4: pims
     // metadata read of the first file; F2 extension check)
@@ -155,8 +158,8 @@ object SmartSpimJob {
         prev.foreach(_.unpersist(blocking = false))
         prev = None
         shapes.foreach { case (stackDir, shape) =>
-          writeZarray(storeFor(outDir, stackDir), level, shape, chunk, settings,
-            compressed)
+          ZarrStore.writeLevelMeta(storeFor(outDir, stackDir), level,
+            shape.map(_.toLong), layout)
         }
         if (level < settings.downsampleLevels - 1) {
           val nextShapes = shapes.view.mapValues(_.zip(settings.scaleFactor)
@@ -186,8 +189,6 @@ object SmartSpimJob {
         minMax = Seq((0.0, 65535.0)),      // uint16 dtype bounds (A2)
         startEnd = Seq((0.0, 350.0)))      // hard-coded window (A3, :623-627)
       if (settings.zarrFormat == 2) {
-        write(s"$store/.zgroup", ZarrMeta.render(ZarrMeta.zgroup))
-        write(s"$outDir/$channelName/.zgroup", ZarrMeta.render(ZarrMeta.zgroup))
         val attrs = JObject(
           ZarrMeta.multiscales(stackName, settings.downsampleLevels,
             settings.scaleFactor, voxelZyx).obj ++
@@ -195,7 +196,7 @@ object SmartSpimJob {
         // write-time schema validation, mirroring the reference's
         // fmt.validate (png_to_zarr.py:293-295)
         ZarrMeta.validateNgff(attrs)
-        write(s"$store/.zattrs", ZarrMeta.render(attrs))
+        ZarrStore.writeGroupMeta(store, 2, Some(attrs))
       } else {
         // zarr v3 / OME-NGFF 0.5: ONE `zarr.json` group doc carries the
         // "ome" attributes envelope (version at the envelope, RFC-2);
@@ -205,37 +206,10 @@ object SmartSpimJob {
             settings.scaleFactor, voxelZyx).obj ++
           JObject("omero" -> omero).obj)
         ZarrMeta.validateNgff05(ome)
-        write(s"$store/zarr.json", ZarrMeta.render(ZarrMeta.zarrJsonGroup(Some(ome))))
-        write(s"$outDir/$channelName/zarr.json",
-          ZarrMeta.render(ZarrMeta.zarrJsonGroup()))
+        ZarrStore.writeGroupMeta(store, 3, Some(ome))
       }
+      ZarrStore.writeGroupMeta(s"$outDir/$channelName", settings.zarrFormat)
     }
-  }
-
-  private def writeZarray(store: String, level: Int, shape: Seq[Int],
-      chunk: Seq[Int], settings: JobSettings, compressed: Boolean): Unit = {
-    val shapeT = Seq(1L, 1L, shape(0).toLong, shape(1).toLong, shape(2).toLong)
-    val chunksT = Seq(1, 1, chunk(0), chunk(1), chunk(2))
-    if (settings.zarrFormat == 2)
-      write(s"$store/$level/.zarray", ZarrMeta.render(
-        ZarrMeta.zarray(shapeT, chunksT, settings.compressorLevel,
-          settings.byteShuffle, compressed, settings.compressorCname)))
-    else
-      write(s"$store/$level/zarr.json", ZarrMeta.render(
-        ZarrMeta.zarrJsonArray(shapeT, chunksT,
-          settings.shardGrid.map(g => Seq(1, 1, g(0), g(1), g(2))),
-          settings.compressorLevel, settings.byteShuffle, compressed,
-          settings.compressorCname)))
-  }
-
-  /** Metadata write through the Hadoop FileSystem API, so the store
-    * may live on file://, hdfs:// or s3a:// alike (replaces the
-    * reference's aws-CLI staging, S9-S11). */
-  private def write(path: String, content: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val out = fs.create(p, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
   /** Derivatives passthrough (S12, smartspim_job.py:197-215): copy

@@ -3,7 +3,6 @@ package graft.imaging
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.hadoop.fs.{Path => HPath}
 import java.nio.file.{Files, Paths}
 
 /** The SmartSPIM image dataflow, Spark-first (SURVEY.md §3.2):
@@ -377,201 +376,58 @@ object SmartSpimPipeline {
 
   // ------------------------------------------------------- zarr sink (S7)
 
-  /** Write one level's chunks as zarr v2 chunk files under
-    * `<store>/<level>/<t>/<c>/<z>/<y>/<x>` ("/" separator,
-    * png_to_zarr.py:691-699). Edge chunks are padded to the full chunk
-    * shape with the fill value (zarr v2 requirement). Executor-side,
-    * one file per chunk row; atomic via temp + rename so task retries
-    * are safe (deterministic chunk paths make retries idempotent).
-    */
+  /** Write one level's chunks as zarr v2 chunk objects of one store
+    * (key layout, padding, codec and atomic put: [[ZarrStore]]). */
   def writeLevel(chunks: Dataset[ChunkRow], store: String, level: Int,
       chunk: Seq[Int], clevel: Int, byteShuffle: Boolean,
       compressed: Boolean, cname: String = "zstd"): Unit =
     writeLevelBy(chunks, _ => store, level, chunk, clevel, byteShuffle,
       compressed, cname)
 
-  /** Pad an edge chunk to the full chunk shape (zarr requirement) and
-    * apply the blosc codec — the per-chunk payload as stored. */
-  private def encodeChunk(c: ChunkRow, cz: Int, cy: Int, cx: Int,
-      clevel: Int, byteShuffle: Boolean, compressed: Boolean,
-      cname: String): Array[Byte] = {
-    val full =
-      if (c.dz == cz && c.dy == cy && c.dx == cx) c.data
-      else {
-        val out = new Array[Byte](cz * cy * cx * 2)
-        var z = 0
-        while (z < c.dz) {
-          var y = 0
-          while (y < c.dy) {
-            System.arraycopy(c.data, ((z * c.dy + y) * c.dx) * 2,
-              out, ((z * cy + y) * cx) * 2, c.dx * 2)
-            y += 1
-          }
-          z += 1
-        }
-        out
-      }
-    if (compressed) BloscCodec.compress(full, 2, clevel, byteShuffle, cname)
-    else full
-  }
-
-  /** Commit a fully-written temp object to its deterministic target.
-    * First rename can lose only to a concurrent retry of the SAME
-    * deterministic write (identical bytes): delete and retry once. A
-    * second failure with the target present means the racer re-won —
-    * drop our tmp; with no target it's a real store fault, and
-    * silently dropping the object would corrupt the array, so throw
-    * (the task retries). */
-  private[graft] def commitTmp(fs: org.apache.hadoop.fs.FileSystem,
-      tmp: HPath, target: HPath): Unit =
-    if (!fs.rename(tmp, target)) {
-      fs.delete(target, false)
-      if (!fs.rename(tmp, target)) {
-        if (fs.exists(target)) fs.delete(tmp, false)
-        else throw new java.io.IOException(
-          s"store commit failed: rename $tmp -> $target")
-      }
-    }
-
-  /** Atomic whole-object store write: temp + rename so task retries
-    * are safe (deterministic paths make retries idempotent). */
-  private def atomicPut(dir: HPath, name: String, payload: Array[Byte]): Unit = {
-    val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    fs.mkdirs(dir)
-    val target = new HPath(dir, name)
-    val tmp = new HPath(dir, s".$name.tmp-${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(payload) finally out.close()
-    commitTmp(fs, tmp, target)
-  }
-
   /** Multi-store variant: `storeOf` maps a chunk row's stack key to its
     * OME-Zarr store path, so one write job covers every stack in the
     * shard (the pooled pipeline). The closure must be serializable —
     * derive the store from the stack path, don't capture a session.
     *
-    * `format` 2 (default) writes the reference's v2 key layout
-    * `<level>/0/0/z/y/x`; 3 writes the v3 default encoding
-    * `<level>/c/0/0/z/y/x`. `shard` (chunks-per-shard Z,Y,X; v3 only)
-    * writes `sharding_indexed` shard objects instead of chunk files.
+    * `format` 2 (default) writes the reference's v2 layout, 3 the v3
+    * default key encoding; `shard` (chunks-per-shard Z,Y,X; v3 only)
+    * writes `sharding_indexed` shard objects instead of chunk objects.
+    * Every object goes through one [[ZarrStore.ChunkWriter]] per task.
     *
     * With `colocated=true` (round-11: the single-shuffle sharded
     * write), `chunks` MUST come from a shard-keyed assembly
     * ([[rechunk]]/[[downsampleLevel]] with the SAME `shard` grid):
     * each partition then holds whole shards, contiguously — the writer
-    * encodes and streams shard objects per-partition with ZERO
-    * additional exchange, and per-task memory is one encoded payload.
-    * With `colocated=false` the writer assumes nothing: chunks are
-    * compressed map-side, then ONE extra shuffle keyed by
-    * (stack, shard coords) co-locates each shard's inner chunks so the
-    * whole object assembles in a single task — shuffle volume is the
-    * compressed level. */
+    * streams shard objects per-partition with ZERO additional exchange,
+    * and per-task memory is one encoded payload. With
+    * `colocated=false` the writer assumes nothing and first re-keys the
+    * chunks through that same shard-keyed assembly (one shuffle of the
+    * uncompressed level), then streams the same way. */
   def writeLevelBy(chunks: Dataset[ChunkRow], storeOf: String => String,
       level: Int, chunk: Seq[Int], clevel: Int, byteShuffle: Boolean,
       compressed: Boolean, cname: String = "zstd",
       format: Int = 2, shard: Option[Seq[Int]] = None,
       colocated: Boolean = false): Unit = {
-    val Seq(cz, cy, cx) = chunk
-    shard match {
-      case Some(Seq(gz, gy, gx)) if format == 3 && colocated =>
-        chunks.foreachPartition { (it: Iterator[ChunkRow]) =>
-          val conf = new org.apache.hadoop.conf.Configuration()
-          val nSlots = gz * gy * gx
-          var key: (String, Int, Int, Int) = null
-          var offsets: Array[Long] = null
-          var lens: Array[Long] = null
-          var off = 0L
-          var fs: org.apache.hadoop.fs.FileSystem = null
-          var out: org.apache.hadoop.fs.FSDataOutputStream = null
-          var tmp: HPath = null
-          var target: HPath = null
-          def flush(): Unit = if (key != null) {
-            out.write(ZarrShard.index(offsets, lens)); out.close(); out = null
-            commitTmp(fs, tmp, target)
-            key = null
-          }
-          try {
-            it.foreach { c =>
-              val k = (c.stack, c.zc / gz, c.yc / gy, c.xc / gx)
-              if (k != key) {
-                flush()
-                key = k
-                offsets = Array.fill(nSlots)(-1L)
-                lens = Array.fill(nSlots)(-1L)
-                off = 0L
-                val dir = new HPath(storeOf(c.stack), s"$level/c/0/0/${k._2}/${k._3}")
-                fs = dir.getFileSystem(conf)
-                fs.mkdirs(dir)
-                val name = k._4.toString
-                target = new HPath(dir, name)
-                tmp = new HPath(dir, s".$name.tmp-${java.util.UUID.randomUUID}")
-                out = fs.create(tmp, true)
-              }
-              val payload =
-                encodeChunk(c, cz, cy, cx, clevel, byteShuffle, compressed, cname)
-              val slot = ((c.zc % gz) * gy + (c.yc % gy)) * gx + (c.xc % gx)
-              offsets(slot) = off; lens(slot) = payload.length.toLong
-              out.write(payload); off += payload.length
-            }
-            flush()
-          } finally if (out != null) {
-            // failed task: close AND delete the open tmp, or retries
-            // accumulate `.N.tmp-UUID` orphans in the store
-            out.close()
-            if (fs != null && tmp != null) fs.delete(tmp, false)
-          }
-        }
-      case Some(Seq(gz, gy, gx)) if format == 3 =>
+    val layout = ZarrStore.Layout(format, chunk, shard, clevel, byteShuffle,
+      compressed, cname)
+    val rows = layout.grid match {
+      case Some(g) if !colocated =>
+        // re-key the chunks by shard: the same one-shuffle shard
+        // assembly the colocated callers ran upstream
         val session = chunks.sparkSession
         import session.implicits._
-        chunks
-          .map(c => (c.stack, c.zc, c.yc, c.xc,
-            encodeChunk(c, cz, cy, cx, clevel, byteShuffle, compressed, cname)))
-          .groupByKey { case (stack, zc, yc, xc, _) =>
-            (stack, zc / gz, yc / gy, xc / gx) }
-          .mapGroups { (key: (String, Int, Int, Int),
-              it: Iterator[(String, Int, Int, Int, Array[Byte])]) =>
-            // STREAMED shard assembly: payloads go to the store in
-            // iterator order with per-slot (offset, nbytes) recorded,
-            // index+crc appended last (index_location=end permits any
-            // body order). Peak memory = ONE payload, not the shard —
-            // buffering whole shards across 32 local tasks OOMed an
-            // 8 g heap on the 2 GB ImagingBench stack.
-            val (stack, sz, sy, sx) = key
-            val nSlots = gz * gy * gx
-            val offsets = Array.fill(nSlots)(-1L)
-            val lens = Array.fill(nSlots)(-1L)
-            val dir = new HPath(storeOf(stack), s"$level/c/0/0/$sz/$sy")
-            val fs = dir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            fs.mkdirs(dir)
-            val name = sx.toString
-            val target = new HPath(dir, name)
-            val tmp = new HPath(dir, s".$name.tmp-${java.util.UUID.randomUUID}")
-            val out = fs.create(tmp, true)
-            var off = 0L
-            try {
-              it.foreach { case (_, zc, yc, xc, payload) =>
-                val slot = ((zc % gz) * gy + (yc % gy)) * gx + (xc % gx)
-                offsets(slot) = off; lens(slot) = payload.length.toLong
-                out.write(payload); off += payload.length
-              }
-              out.write(ZarrShard.index(offsets, lens))
-            } finally out.close()
-            commitTmp(fs, tmp, target)
-            1
-          }
-          .foreach((_: Int) => ()) // side-effecting write: force execution
-      case _ =>
-        chunks.foreachPartition { (it: Iterator[ChunkRow]) =>
-          it.foreach { c =>
-            val payload =
-              encodeChunk(c, cz, cy, cx, clevel, byteShuffle, compressed, cname)
-            val dir = new HPath(storeOf(c.stack),
-              if (format == 2) s"$level/0/0/${c.zc}/${c.yc}"
-              else s"$level/c/0/0/${c.zc}/${c.yc}")
-            atomicPut(dir, c.xc.toString, payload)
-          }
-        }
+        assembleFragments(chunks.map(c =>
+          SubBlock(c.stack, c.zc, c.yc, c.xc, 0, 0, 0, c.dz, c.dy, c.dx, c.data)),
+          Some(g))
+      case _ => chunks
+    }
+    rows.foreachPartition { (it: Iterator[ChunkRow]) =>
+      val w = new ZarrStore.ChunkWriter(layout)
+      try {
+        it.foreach(c => w.write(storeOf(c.stack), level, c.zc, c.yc, c.xc,
+          c.dz, c.dy, c.dx, c.data))
+        w.finish(); ()
+      } finally w.abort()
     }
   }
 
@@ -616,8 +472,7 @@ object SmartSpimPipeline {
       yc <- 0 until (ny + cy - 1) / cy
       xc <- 0 until (nx + cx - 1) / cx
     } {
-      val p = Paths.get(store, level.toString, "0", "0",
-        zc.toString, yc.toString, xc.toString)
+      val p = Paths.get(store, ZarrStore.chunkKey(2, level, zc, yc, xc))
       if (Files.exists(p)) {
         val raw = Files.readAllBytes(p)
         val full = if (compressed) BloscCodec.decompress(raw) else raw

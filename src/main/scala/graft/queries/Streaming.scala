@@ -24,17 +24,17 @@ object Streaming {
     * flipping the
     * session-global conf (which a CONCURRENT batch query on the shared
     * session would observe), each streaming query runs on its own child
-    * session from `newSession()`: shared SparkContext and cached data,
-    * isolated SQLConf — no other query can ever see n=2. The child also
+    * session ([[graft.core.Sessions.child]]): shared SparkContext,
+    * cached data and planner rules, isolated SQLConf — no other query
+    * can ever see n=2. The child also
     * carries the nanos-as-long legacy parquet flag the event fixtures
     * need, again without touching the parent. Children are not closed
     * (closing would stop the shared context); an idle child session is
     * a few conf maps, collected with the reference. */
   private def onStreamSession[T](parent: SparkSession)(body: SparkSession => T): T = {
-    val s = parent.newSession()
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"))
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = graft.core.Sessions.child(parent,
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"),
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     // State-store provider switch (measured round 10 at sf1, calm
     // calib 0.38 both runs): RocksDB costs 1.2-1.8x vs the default
     // HDFS-backed store while state fits heap (q_stream_dedup 2M keys

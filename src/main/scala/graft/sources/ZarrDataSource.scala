@@ -17,7 +17,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.imaging.BloscCodec
+import graft.imaging.{BloscCodec, ZarrStore}
 
 /** DataSource V2 `zarr` format (SURVEY.md §7 step 8): the OME-Zarr
   * chunk store as a first-class Spark table of chunk rows.
@@ -38,19 +38,22 @@ import graft.imaging.BloscCodec
   *  - **Column pruning**: a scan that doesn't need `data` never reads
   *    a chunk file at all (coordinates come from the path grid), so
   *    `count()`/metadata queries are pure-listing.
-  *  - **Write** pads edge chunks to the full chunk shape, optionally
-  *    blosc/zstd-compresses (C1), and commits each file atomically via
-  *    temp + rename — task retries are idempotent because chunk paths
-  *    are deterministic.
+  *  - **Write** goes through the conversion job's own store writer
+  *    ([[graft.imaging.ZarrStore]]): edge chunks padded to the full
+  *    chunk shape, optionally blosc/zstd-compressed (C1), each object
+  *    committed atomically via temp + rename — task retries are
+  *    idempotent because keys are deterministic. Sharded output
+  *    streams one open shard per task, so the input must be
+  *    shard-clustered and shard-contiguous (see [[ZarrDataWriter]]); a
+  *    split shard fails the write, naming the shard.
   *
-  * Store layout: zarr v2 with "/" dimension separator exactly as the
-  * reference writes it — `<store>/<level>/0/0/<zc>/<yc>/<xc>` plus a
-  * `.zarray` JSON per level — AND zarr v3 (OME-NGFF 0.5): `zarr.json`
-  * metadata, `c/`-prefixed default chunk keys, and the
-  * `sharding_indexed` codec (option `zarr_format=3`, `shard=z,y,x`
-  * chunks-per-shard) so a 100 TB store ships one object per SHARD
-  * instead of per chunk — reads resolve chunks through each shard's
-  * crc32c-guarded footer index, and v2 stores stay readable unchanged.
+  * Store layout ([[graft.imaging.ZarrStore]]): zarr v2 with "/"
+  * dimension separator exactly as the reference writes it, AND zarr v3
+  * (OME-NGFF 0.5) with default chunk keys and the `sharding_indexed`
+  * codec (option `zarr_format=3`, `shard=z,y,x` chunks-per-shard), so
+  * a 100 TB store ships one object per SHARD instead of per chunk —
+  * reads resolve chunks through each shard's crc32c-guarded footer
+  * index, and v2 stores stay readable unchanged.
   * Pixels are uint16 little-endian. Chunk
   * payloads use the c-blosc1 frame layout (BloscCodec): this source
   * reads zstd-, lz4- and snappy-format blosc frames, including
@@ -106,8 +109,8 @@ object ZarrTable {
       case JArray(vs) => vs.collect { case JInt(i) => i.toInt }
       case _ => Nil
     }
-    val v2 = new HPath(store, s"$level/.zarray")
-    val v3 = new HPath(store, s"$level/zarr.json")
+    val v2 = new HPath(store, ZarrStore.levelMetaKey(2, level))
+    val v3 = new HPath(store, ZarrStore.levelMetaKey(3, level))
     if (fs.exists(v2)) {
       val j = JsonMethods.parse(readText(fs, v2))
       val shape = ints(j \ "shape").takeRight(3)
@@ -265,18 +268,14 @@ class ZarrScan(store: String, pushed: Array[Filter], required: StructType)
         coords = Map("level" -> level, "zc" -> zc, "yc" -> yc, "xc" -> xc)
         if pushed.forall(ZarrTable.matches(_, coords))
       } {
-        // chunk addressing by store version: v2 "<level>/0/0/z/y/x";
-        // v3 default key encoding "<level>/c/0/0/z/y/x"; v3 sharded —
-        // the SHARD object keyed by shard grid coords, chunk resolved
-        // through the shard's row-major inner index
-        val (path, shardRef) = (m.format, m.shard) match {
-          case (2, _) => (s"$store/$level/0/0/$zc/$yc/$xc", None)
-          case (_, None) => (s"$store/$level/c/0/0/$zc/$yc/$xc", None)
-          case (_, Some(Seq(sz, sy, sx))) =>
-            val shardPath = s"$store/$level/c/0/0/${zc / sz}/${yc / sy}/${xc / sx}"
-            val slot = ((zc % sz) * sy + (yc % sy)) * sx + (xc % sx)
-            (shardPath, Some(ZarrShardRef(shardPath, slot, sz * sy * sx,
-              m.shardIdxCrc, m.shardIdxStart)))
+        // v3 sharded: the SHARD object, the chunk resolved through the
+        // shard's row-major inner index
+        val (path, shardRef) = m.shard match {
+          case None => (s"$store/${ZarrStore.chunkKey(m.format, level, zc, yc, xc)}", None)
+          case Some(g) =>
+            val shardPath = s"$store/${ZarrStore.shardKey(g, level, zc, yc, xc)}"
+            (shardPath, Some(ZarrShardRef(shardPath, ZarrStore.slot(g, zc, yc, xc),
+              g.product, m.shardIdxCrc, m.shardIdxStart)))
         }
         specs += ZarrChunkSpec(level, zc, yc, xc,
           math.min(cz, nz - zc * cz), math.min(cy, ny - yc * cy),
@@ -421,151 +420,76 @@ class ZarrWriteBuilder(store: String, info: LogicalWriteInfo)
 
 class ZarrBatchWrite(store: String, info: LogicalWriteInfo) extends BatchWrite {
   private def opts = info.options()
-  private def chunk = Option(opts.get("chunk"))
-    .map(_.split(",").map(_.trim.toInt).toSeq).getOrElse(Seq(128, 128, 128))
-  private def clevel = Option(opts.get("clevel")).map(_.toInt).getOrElse(3)
-  private def shuffle = Option(opts.get("shuffle")).forall(_.toBoolean)
-  private def compressed = Option(opts.get("compressed")).forall(_.toBoolean)
-  /** `zarr_format` 2 (default, the reference's layout) or 3. */
-  private def format = Option(opts.get("zarr_format")).map(_.toInt).getOrElse(2)
-  /** v3 only: chunks-per-shard grid ("2,2,2") → sharding_indexed. */
-  private def shard = Option(opts.get("shard"))
-    .map(_.split(",").map(_.trim.toInt).toSeq)
+  /** `zarr_format` 2 (default, the reference's layout) or 3; `shard`
+    * (v3 only) is the chunks-per-shard grid ("2,2,2") → sharding_indexed. */
+  private def layout = ZarrStore.Layout(
+    format = Option(opts.get("zarr_format")).map(_.toInt).getOrElse(2),
+    chunk = Option(opts.get("chunk")).map(_.split(",").map(_.trim.toInt).toSeq)
+      .getOrElse(Seq(128, 128, 128)),
+    shard = Option(opts.get("shard")).map(_.split(",").map(_.trim.toInt).toSeq),
+    clevel = Option(opts.get("clevel")).map(_.toInt).getOrElse(3),
+    byteShuffle = Option(opts.get("shuffle")).forall(_.toBoolean),
+    compressed = Option(opts.get("compressed")).forall(_.toBoolean))
 
   override def createBatchWriterFactory(p: PhysicalWriteInfo): DataWriterFactory =
-    ZarrWriterFactory(store, info.schema().fieldNames, chunk, clevel, shuffle,
-      compressed, format, shard)
+    ZarrWriterFactory(store, info.schema().fieldNames, layout)
 
-  /** Driver-side finalize: when the caller provides the level's logical
-    * shape (`shape` = "Z,Y,X", `level` default 0), commit writes the
-    * level metadata (`.zarray` for v2, `zarr.json` for v3 — plus the
-    * root v3 group doc), making the store self-describing for the read
+  /** Driver-side finalize. First the sink contract: a shard object
+    * reported by two tasks was written twice, and the last rename won,
+    * so the write fails naming the shard. Then, when the caller
+    * provides the level's logical shape (`shape` = "Z,Y,X", `level`
+    * default 0), the level metadata — plus, for v3, a root group doc
+    * if none exists — making the store self-describing for the read
     * path without a separate metadata step. */
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val shards = messages.toSeq.collect { case ZarrCommit(s) => s }.flatten
+    shards.diff(shards.distinct).headOption.foreach { k =>
+      throw new IllegalStateException(s"zarr shard $k was written by two tasks; " +
+        "the zarr sink requires shard-clustered, shard-contiguous partitions")
+    }
     Option(opts.get("shape")).foreach { s =>
-      val Seq(nz, ny, nx) = s.split(",").map(_.trim.toLong).toSeq
+      val l = layout
       val level = Option(opts.get("level")).map(_.toInt).getOrElse(0)
-      val fs = new HPath(store).getFileSystem(new Configuration())
-      def put(p: HPath, txt: String): Unit = {
-        val out = fs.create(p, true)
-        try out.write(txt.getBytes("UTF-8")) finally out.close()
-      }
-      if (format == 2)
-        put(new HPath(store, s"$level/.zarray"),
-          graft.imaging.ZarrMeta.render(graft.imaging.ZarrMeta.zarray(
-            Seq(1L, 1L, nz, ny, nx), Seq(1, 1, chunk(0), chunk(1), chunk(2)),
-            clevel, shuffle, compressed)))
-      else {
-        put(new HPath(store, s"$level/zarr.json"),
-          graft.imaging.ZarrMeta.render(graft.imaging.ZarrMeta.zarrJsonArray(
-            Seq(1L, 1L, nz, ny, nx), Seq(1, 1, chunk(0), chunk(1), chunk(2)),
-            shard.map(sh => Seq(1, 1, sh(0), sh(1), sh(2))),
-            clevel, shuffle, compressed)))
-        val root = new HPath(store, "zarr.json")
-        if (!fs.exists(root))
-          put(root, graft.imaging.ZarrMeta.render(
-            graft.imaging.ZarrMeta.zarrJsonGroup()))
-      }
+      ZarrStore.writeLevelMeta(store, level, s.split(",").map(_.trim.toLong).toSeq, l)
+      if (l.format == 3) ZarrStore.writeGroupMeta(store, 3, replace = false)
     }
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = ()
 }
 
 final case class ZarrWriterFactory(store: String, fieldNames: Array[String],
-    chunk: Seq[Int], clevel: Int, shuffle: Boolean, compressed: Boolean,
-    format: Int = 2, shard: Option[Seq[Int]] = None)
-    extends DataWriterFactory {
+    layout: ZarrStore.Layout) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ZarrDataWriter(store, fieldNames, chunk, clevel, shuffle, compressed,
-      format, shard)
+    new ZarrDataWriter(store, fieldNames, layout)
 }
 
-final case class ZarrCommit(files: Int) extends WriterCommitMessage
+/** The shard objects a task wrote, as `<store>/<key>`. */
+final case class ZarrCommit(shards: Seq[String]) extends WriterCommitMessage
 
-/** Pads each chunk row to the full chunk shape, compresses, and writes
-  * it atomically (temp + rename): v2 at `<level>/0/0/<zc>/<yc>/<xc>`,
-  * v3 at `<level>/c/0/0/<zc>/<yc>/<xc>`.
+/** Streams each chunk row through one [[ZarrStore.ChunkWriter]]:
+  * padded, encoded and stored as it arrives (an atomic object per
+  * chunk, or appended to the one open shard object). No payload is
+  * buffered.
   *
-  * v3 sharded (`shard` = chunks-per-shard grid): inner-chunk payloads
-  * accumulate per shard and each COMPLETE shard object —
-  * concatenated inner chunks + the row-major (offset, nbytes) uint64-LE
-  * index + its crc32c, index_location=end — commits atomically at task
-  * commit. Contract at scale: rows must be partitioned so one shard's
-  * chunks land in one task (repartition on (level, zc/sz, yc/sy,
-  * xc/sx) before the write — two tasks holding halves of a shard would
-  * race whole-object renames); memory per task is bounded by open
-  * shards × shard bytes, so additionally sorting within partitions by
-  * the shard key keeps exactly one shard open at a time. */
-class ZarrDataWriter(store: String, fieldNames: Array[String], chunk: Seq[Int],
-    clevel: Int, shuffle: Boolean, compressed: Boolean,
-    format: Int, shard: Option[Seq[Int]])
-    extends DataWriter[InternalRow] {
+  * Contract for v3 sharded writes: shard-clustered, shard-contiguous
+  * partitions — repartition on (level, zc/sz, yc/sy, xc/sx) and sort
+  * within partitions by that key before the write. A shard whose
+  * chunks arrive split fails the write instead of silently losing the
+  * chunks of one half: within a task the shard writer rejects a shard
+  * it already finished, and across tasks the driver commit rejects a
+  * shard two tasks reported. */
+class ZarrDataWriter(store: String, fieldNames: Array[String],
+    layout: ZarrStore.Layout) extends DataWriter[InternalRow] {
   private val ord = fieldNames.zipWithIndex.toMap
-  private val Seq(cz, cy, cx) = chunk
-  private var written = 0
-  /** (level, shard z, shard y, shard x) → row-major inner payloads */
-  private val openShards = scala.collection.mutable.LinkedHashMap
-    .empty[(Int, Int, Int, Int), Array[Array[Byte]]]
-  @transient private lazy val fs =
-    new HPath(store).getFileSystem(new Configuration())
+  private val (iLevel, iZ, iY, iX) = (ord("level"), ord("zc"), ord("yc"), ord("xc"))
+  private val (iDz, iDy, iDx, iData) = (ord("dz"), ord("dy"), ord("dx"), ord("data"))
+  private val writer = new ZarrStore.ChunkWriter(layout)
 
-  private def atomicPut(dir: HPath, name: String, payload: Array[Byte]): Unit = {
-    fs.mkdirs(dir)
-    val target = new HPath(dir, name)
-    val tmp = new HPath(dir, s".$name.tmp-${java.util.UUID.randomUUID}")
-    val out = fs.create(tmp, true)
-    try out.write(payload) finally out.close()
-    graft.imaging.SmartSpimPipeline.commitTmp(fs, tmp, target)
-  }
+  override def write(r: InternalRow): Unit =
+    writer.write(store, r.getInt(iLevel), r.getInt(iZ), r.getInt(iY), r.getInt(iX),
+      r.getInt(iDz), r.getInt(iDy), r.getInt(iDx), r.getBinary(iData))
 
-  override def write(r: InternalRow): Unit = {
-    val (level, zc, yc, xc) = (r.getInt(ord("level")), r.getInt(ord("zc")),
-      r.getInt(ord("yc")), r.getInt(ord("xc")))
-    val (dz, dy, dx) = (r.getInt(ord("dz")), r.getInt(ord("dy")), r.getInt(ord("dx")))
-    val data = r.getBinary(ord("data"))
-    val full =
-      if (dz == cz && dy == cy && dx == cx) data
-      else {
-        val out = new Array[Byte](cz * cy * cx * 2)
-        var z = 0
-        while (z < dz) {
-          var y = 0
-          while (y < dy) {
-            System.arraycopy(data, ((z * dy + y) * dx) * 2,
-              out, ((z * cy + y) * cx) * 2, dx * 2)
-            y += 1
-          }
-          z += 1
-        }
-        out
-      }
-    val payload =
-      if (compressed) BloscCodec.compress(full, 2, clevel, shuffle) else full
-    shard match {
-      case Some(Seq(gz, gy, gx)) if format == 3 =>
-        val key = (level, zc / gz, yc / gy, xc / gx)
-        val slots = openShards.getOrElseUpdate(key,
-          new Array[Array[Byte]](gz * gy * gx))
-        slots(((zc % gz) * gy + (yc % gy)) * gx + (xc % gx)) = payload
-      case _ =>
-        val dir =
-          if (format == 2) new HPath(store, s"$level/0/0/$zc/$yc")
-          else new HPath(store, s"$level/c/0/0/$zc/$yc")
-        atomicPut(dir, xc.toString, payload)
-    }
-    written += 1
-  }
-
-  /** Assemble and atomically store every buffered shard. */
-  private def flushShards(): Unit = {
-    openShards.foreach { case ((level, sz, sy, sx), slots) =>
-      atomicPut(new HPath(store, s"$level/c/0/0/$sz/$sy"), sx.toString,
-        graft.imaging.ZarrShard.assemble(slots))
-    }
-    openShards.clear()
-  }
-
-  override def commit(): WriterCommitMessage = { flushShards(); ZarrCommit(written) }
-  override def abort(): Unit = () // deterministic paths: retry overwrites
+  override def commit(): WriterCommitMessage = ZarrCommit(writer.finish())
+  override def abort(): Unit = writer.abort()
   override def close(): Unit = ()
 }

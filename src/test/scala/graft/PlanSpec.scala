@@ -277,6 +277,21 @@ class PlanSpec extends AnyFunSuite {
     } finally graft.plans.TopKPerKeyPlans.uninstall(spark)
   }
 
+  test("child sessions keep the parent's planner rules (floor session plans TopKPerKey)") {
+    val parent = spark.newSession()
+    def floorPlan: String = graft.queries.Scoped.planOnly {
+      SparkEntry.queries("q_topk_per_group")(
+        graft.queries.Scoped.coalesceFloorSession(parent), SF)
+        .queryExecution.executedPlan.toString
+    }
+    graft.plans.TopKPerKeyPlans.install(parent)
+    assert(floorPlan.contains("TopKPerKey"),
+      "a top-k window on the floor session should run through the heap operator")
+    // the floor child is memoized: a later uninstall still reaches it
+    graft.plans.TopKPerKeyPlans.uninstall(parent)
+    assert(!floorPlan.contains("TopKPerKey"))
+  }
+
   test("windowed queries partition their window (no empty partitionBy sorts)") {
     // q_win_rank / q_zorder_rank / q_win_lag windows all carry a
     // partitioning key; a global window would show a single Sort with

@@ -15,8 +15,8 @@ import graft.core.JobSettings
   * local mode never starts the speculation thread), and the resulting
   * store must be byte-identical to the non-speculative run. Duplicate
   * attempts race on the deterministic-path tmp+rename branches in the
-  * chunk and shard writers (`SmartSpimPipeline.atomicPut` /
-  * `writeLevelBy`), which this is the first test to actually drive.
+  * chunk and shard writers (`ZarrStore.put` / `ZarrStore.ShardWriter`),
+  * which this is the first test to actually drive.
   */
 class SpeculationSpec extends AnyFunSuite {
   private lazy val spark = SparkSessionTestWrapper.spark

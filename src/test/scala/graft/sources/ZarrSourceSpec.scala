@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSessionTestWrapper
 import graft.functions.GraftExtensions
-import graft.imaging.{BloscCodec, ZarrMeta}
+import graft.imaging.{BloscCodec, ZarrMeta, ZarrStore}
 
 /** DataSource V2 `zarr` format: write/read round trip, chunk-grid
   * filter pushdown, listing-only column pruning, edge-chunk padding
@@ -146,6 +146,34 @@ class ZarrSourceSpec extends AnyFunSuite {
       assert(BloscCodec.decompress(a).sameElements(BloscCodec.decompress(b)),
         s"chunk ($zc,$yc,$xc) differs between v2 writer and foreachPartition sink")
     }
+    // zarr v3 with (2,2,2) chunks per shard: the job's colocated shard
+    // writer (input shard-keyed and shard-contiguous, as rechunk makes
+    // it) plus the job's level metadata, against the sink
+    val grid = Seq(2, 2, 2)
+    val store3 = makeStoreV3(compressed = true, Some(grid))
+    val store4 = Files.createTempDirectory("zarr-src-spec-fep-v3")
+    val colocated = ds
+      .repartition(floor(col("zc") / 2), floor(col("yc") / 2), floor(col("xc") / 2))
+      .sortWithinPartitions(floor(col("zc") / 2), floor(col("yc") / 2),
+        floor(col("xc") / 2), col("zc"), col("yc"), col("xc"))
+      .as[ChunkRow]
+    val out4 = store4.toString // the store closure ships to the tasks
+    graft.imaging.SmartSpimPipeline.writeLevelBy(colocated, _ => out4, 0,
+      Chunk, 3, byteShuffle = true, compressed = true, "zstd", 3, Some(grid),
+      colocated = true)
+    ZarrStore.writeLevelMeta(out4, 0, Shape.map(_.toLong),
+      ZarrStore.Layout(3, Chunk, Some(grid), 3, byteShuffle = true, compressed = true))
+    assert(Files.readAllBytes(store3.resolve("0/zarr.json"))
+      .sameElements(Files.readAllBytes(store4.resolve("0/zarr.json"))),
+      "level zarr.json differs between the job writer and the sink")
+    def decoded(store: Path): Seq[(Int, Int, Int, Seq[Byte])] =
+      spark.read.format("zarr").load(store.toString)
+        .select("zc", "yc", "xc", "data").as[(Int, Int, Int, Array[Byte])]
+        .collect().toSeq.map(r => (r._1, r._2, r._3, r._4.toSeq))
+        .sortBy(r => (r._1, r._2, r._3))
+    val (sink, job) = (decoded(store3), decoded(store4))
+    assert(sink.size == 8 && sink.forall(_._4.nonEmpty))
+    assert(sink == job, "inner chunks differ between v3 shard writer and sink")
   }
 
   test("random shapes/chunks round-trip through the v2 source (property)") {
@@ -250,12 +278,14 @@ class ZarrSourceSpec extends AnyFunSuite {
 
   /** The sharded-write contract (ZarrDataWriter scaladoc): co-locate
     * each shard's chunks in one task by repartitioning on the shard
-    * key before the write. */
+    * key, contiguously by sorting within partitions on it. */
   private def shardAligned(df: org.apache.spark.sql.DataFrame,
       shard: Seq[Int]): org.apache.spark.sql.DataFrame = {
     val Seq(gz, gy, gx) = shard
-    df.repartition(col("level"), floor(col("zc") / gz),
+    val key = Seq(col("level"), floor(col("zc") / gz),
       floor(col("yc") / gy), floor(col("xc") / gx))
+    df.repartition(key: _*)
+      .sortWithinPartitions(key ++ Seq(col("zc"), col("yc"), col("xc")): _*)
   }
 
   private def makeStoreV3(compressed: Boolean, shard: Option[Seq[Int]]): Path = {
@@ -270,6 +300,10 @@ class ZarrSourceSpec extends AnyFunSuite {
     shard.fold(w)(sh => w.option("shard", sh.mkString(","))).save(store.toString)
     store
   }
+
+  /** Messages along a throwable's cause chain. */
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
 
   private def assertAllVoxels(store: Path): Unit = {
     val rows = spark.read.format("zarr").load(store.toString)
@@ -354,6 +388,24 @@ class ZarrSourceSpec extends AnyFunSuite {
     assert(rows.find(r => (r._1, r._2, r._3) == ((0, 0, 0))).get._4 != null)
   }
 
+  test("v3 sink: a shard split round-robin over two tasks fails, naming the shard") {
+    val store = Files.createTempDirectory("zarr-v3-split")
+    // the 8 chunks of ONE (2,2,2) shard; slice i of the rdd gets
+    // chunks i, i+2, i+4, i+6 — each task holds half of the shard
+    val rows = chunkRows(0).zipWithIndex.sortBy(_._2 % 2).map(_._1)
+    val df = spark.sparkContext.parallelize(rows, 2)
+      .toDF("level", "zc", "yc", "xc", "dz", "dy", "dx", "data")
+    assert(df.rdd.getNumPartitions == 2)
+    val ex = intercept[Throwable] {
+      df.write.format("zarr").mode("append")
+        .option("chunk", Chunk.mkString(","))
+        .option("shape", Shape.mkString(","))
+        .option("zarr_format", "3").option("shard", "2,2,2")
+        .save(store.toString)
+    }
+    assert(messages(ex).exists(_.contains("0/c/0/0/0/0/0")), s"got: ${messages(ex)}")
+  }
+
   test("v3 sharded re-write is idempotent (task-retry semantics)") {
     val store = makeStoreV3(compressed = true, Some(Seq(1, 2, 2)))
     val before = Files.readAllBytes(store.resolve("0/c/0/0/0/0/0"))
@@ -436,7 +488,7 @@ class ZarrSourceSpec extends AnyFunSuite {
           lens(i) = n
         }
         val newIdx =
-          if (crc) graft.imaging.ZarrShard.index(offs, lens)
+          if (crc) ZarrStore.shardIndex(offs, lens)
           else {
             val b = java.nio.ByteBuffer.allocate(base)
               .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -488,8 +540,6 @@ class ZarrSourceSpec extends AnyFunSuite {
     val ex = intercept[Throwable] {
       spark.read.format("zarr").load(store.toString).select("data").collect()
     }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(ex).exists(_.contains("crc32c")), s"got: ${messages(ex)}")
   }
 
