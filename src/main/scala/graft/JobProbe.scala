@@ -9,7 +9,11 @@ import org.apache.spark.scheduler._
   * wall into "inside jobs" vs "driver gaps" (planning, collects,
   * checkpoint bookkeeping, scheduling latency between jobs) — the
   * number that tells a loop-shaped query whether to attack its plans
-  * or its round-trip count. Dev tool; not part of the driver contract.
+  * or its round-trip count. After a streaming query it also prints
+  * that query's batch trail (`Streaming.progressTrail`): per
+  * micro-batch, the input rows and the addBatch, queryPlanning,
+  * commitOffsets and walCommit durations. Dev tool; not part of the
+  * driver contract.
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.JobProbe q1 [q2 ...]"
   */
@@ -64,6 +68,7 @@ object JobProbe {
       try fn(spark, sfDir).count() catch { case _: Throwable => () } // warm
       spark.sparkContext.addSparkListener(listener)
       done.clear(); stageTasks.clear(); stageToJob.clear()
+      graft.queries.Streaming.progressTrail.remove(name)
       val t0 = System.nanoTime()
       try fn(spark, sfDir).count() catch { case e: Throwable =>
         System.err.println(s"[probe] $name failed: ${e.getMessage}")
@@ -83,6 +88,13 @@ object JobProbe {
           f"taskMs=${r.taskMs}%7d stages=${r.stages} " +
           f"shufR=${r.shufR / 1024}%8dK shufW=${r.shufW / 1024}%8dK  $d")
       }
+      Option(graft.queries.Streaming.progressTrail.get(name)).foreach(_.foreach { p =>
+        val ms = (k: String) => Option(p.durationMs.get(k)).map(_.toString).getOrElse("-")
+        println(s"  batch ${p.batchId} rows=${p.numInputRows} " +
+          s"total=${ms("triggerExecution")}ms addBatch=${ms("addBatch")}ms " +
+          s"queryPlanning=${ms("queryPlanning")}ms " +
+          s"commitOffsets=${ms("commitOffsets")}ms walCommit=${ms("walCommit")}ms")
+      })
     }
     spark.stop()
   }

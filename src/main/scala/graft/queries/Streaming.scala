@@ -3,12 +3,33 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Structured Streaming surface (SURVEY.md §2.10 — absent from the
   * reference, added by the engine). Batch/stream parity comes from
   * Catalyst: the streaming hourly rollup is checked against a plain
   * batch GROUP BY oracle over the same file.
+  *
+  * Every streaming query runs through one runner, [[drain]]. A query
+  * supplies only its plan (events source → streaming frame) and its
+  * finish (drained rows → result); the runner owns the rest:
+  *  - the child session ([[onStreamSession]]; RocksDB when asked);
+  *  - the source: the whole events file, or the memoized three-slice
+  *    time-contiguous replay ([[stageSlices]]), each with its
+  *    memoized schema;
+  *  - a per-invocation unique query name and tmpfs checkpoint;
+  *  - the one `writeStream`, into a memory, parquet-file or
+  *    foreachBatch-upsert [[Sink]];
+  *  - the drain (`processAllAvailable`) and the query's batch trail in
+  *    [[progressTrail]], recorded whether or not the drain succeeds;
+  *  - the read-back, `finish` and localization of the result.
+  * Cleanup guarantee: however the invocation ends — a failed
+  * micro-batch, a failed start, a failed finish — the query is
+  * stopped, the memory sink's temp view dropped, and the checkpoint and
+  * sink directories deleted before the runner returns or rethrows.
+  * Nothing of a drained query outlives its invocation but its trail
+  * entry.
   */
 object Streaming {
   type Q = (SparkSession, String) => DataFrame
@@ -31,7 +52,8 @@ object Streaming {
     * need, again without touching the parent. Children are not closed
     * (closing would stop the shared context); an idle child session is
     * a few conf maps, collected with the reference. */
-  private def onStreamSession[T](parent: SparkSession)(body: SparkSession => T): T = {
+  private def onStreamSession[T](parent: SparkSession, rocksDb: Boolean)(
+      body: SparkSession => T): T = {
     val s = graft.core.Sessions.child(parent,
       "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"),
       "spark.sql.legacy.parquet.nanosAsLong" -> "true")
@@ -43,8 +65,8 @@ object Streaming {
     // store stays the default. RocksDB's value is bounding executor
     // heap once per-executor state EXCEEDS memory (billions of keys);
     // a deployment at that scale flips it with this env var or its
-    // own session conf.
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
+    // own session conf. Queries that REQUIRE RocksDB pass `rocksDb`.
+    if (rocksDb || sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
       useRocksDb(s)
     body(s)
   }
@@ -62,8 +84,7 @@ object Streaming {
     * Measured paired at sf1 (bench_r15_streams_sf1_{default,rocksdb}):
     * family total 1.34x → 0.93x vs the in-memory store; the
     * transformWithState queries (which REQUIRE RocksDB) gained 1.8x /
-    * 2.8x from the same tuning, which is why they call this helper
-    * unconditionally. */
+    * 2.8x from the same tuning, which is why they always get it. */
   private def useRocksDb(s: SparkSession): Unit = {
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -78,9 +99,8 @@ object Streaming {
     // the RocksDB read traffic for a metric the queries never read.
     // Progress reports numRowsTotal = -1 under this flag; the
     // multi-batch eviction gates run on the default provider and are
-    // unaffected. Env-overridable for paired A/Bs.
-    s.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",
-      sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_TRACK_ROWS", "false"))
+    // unaffected.
+    s.conf.set("spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows", "false")
   }
 
   /** Scoped checkpoint root for a drained demo query: tmpfs when the
@@ -94,7 +114,7 @@ object Streaming {
     * consistently SLOWER than processAllAvailable at demo volume —
     * 10.9 s vs 9.6 s subtotal — so the drain keeps the default
     * trigger.) */
-  private def scopedCheckpoint(name: String): String = {
+  private[graft] def scopedCheckpoint(name: String): String = {
     val root =
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm" else
         System.getProperty("java.io.tmpdir", "/tmp")
@@ -108,25 +128,118 @@ object Streaming {
     del(new java.io.File(path))
   }
 
-  /** Drain a started query, then remove its scoped checkpoint. */
-  private def drainScoped(q: org.apache.spark.sql.streaming.StreamingQuery,
-      ck: String): Unit =
-    try q.processAllAvailable()
-    finally { q.stop(); deleteRecursively(ck) }
-
-  /** Per-query StreamingQueryProgress trail captured after the drain,
-    * keyed by inventory name — evidence for the multi-batch gates
-    * (Round13OpsSpec asserts the interval joins really crossed >= 3
-    * micro-batches with state rows evicted between them). Overwritten
-    * per invocation; a few small JSON-backed objects. */
+  /** Per-query StreamingQueryProgress trail, keyed by inventory name
+    * and written by [[drain]] after every drain, failed or not —
+    * evidence for the multi-batch gates (Round13OpsSpec asserts the
+    * interval joins really crossed >= 3 micro-batches with state rows
+    * evicted between them) and the per-batch addBatch / planning /
+    * commit split JobProbe prints. Overwritten per invocation; a few
+    * small JSON-backed objects. */
   private[graft] val progressTrail =
     new java.util.concurrent.ConcurrentHashMap[String,
       Array[org.apache.spark.sql.streaming.StreamingQueryProgress]]()
 
-  /** Stage the events fixture into `n` TIME-CONTIGUOUS single-file
+  /** Where a drained query's rows land, and where [[drain]] reads them
+    * back from. */
+  private[graft] sealed trait Sink
+  private[graft] object Sink {
+    /** The demo drain: rows held on the driver under a temp view named
+      * after the query. */
+    case object Memory extends Sink
+    /** The production parquet file sink; read back through its
+      * `_spark_metadata` commit log (a plain `spark.read.parquet` on
+      * the sink dir resolves committed files only). */
+    case object Files extends Sink
+    /** foreachBatch upsert onto parquet partitioned by `key` under
+      * dynamic partition overwrite: re-emitting a group replaces
+      * exactly that group's partition, so a checkpoint-replayed batch
+      * lands idempotently (last writer wins per group). */
+    final case class Upsert(key: String*) extends Sink
+  }
+
+  /** Run one drained streaming query (the contract is in the object's
+    * scaladoc): `plan` turns the events source — the whole file, or
+    * the three-slice replay read one slice per micro-batch when
+    * `replay` — into the streaming frame, started in output `mode`
+    * into `sink`; `finish` turns the drained rows into the result,
+    * which comes back localized. The progress trail is filed under
+    * `inventoryName`, which also prefixes the query name. */
+  private[graft] def drain(parent: SparkSession, d: String, inventoryName: String,
+      mode: String, replay: Boolean = false, sink: Sink = Sink.Memory,
+      rocksDb: Boolean = false)(plan: DataFrame => DataFrame)(
+      finish: DataFrame => DataFrame): DataFrame = onStreamSession(parent, rocksDb) { s =>
+    val src = eventsStream(s, d, replay)
+    val name = inventoryName + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val ck = scopedCheckpoint(name)
+    val outDir = ck + "_out"
+    try {
+      val w = plan(src).writeStream.outputMode(mode).queryName(name)
+        .option("checkpointLocation", ck)
+      val q = (sink match {
+        case Sink.Memory => w.format("memory")
+        case Sink.Files => w.format("parquet").option("path", outDir)
+        case Sink.Upsert(key @ _*) =>
+          val upsert: (DataFrame, Long) => Unit = (batch, _) =>
+            batch.write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy(key: _*)
+              .parquet(outDir)
+          w.foreachBatch(upsert)
+      }).start()
+      try q.processAllAvailable()
+      finally { q.stop(); progressTrail.put(inventoryName, q.recentProgress) }
+      // memory-sink rows already live on the driver, so localizing the
+      // (small, post-aggregation) result before the cleanup costs
+      // nothing extra
+      val out = finish(if (sink == Sink.Memory) s.table(name) else s.read.parquet(outDir))
+      s.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    } finally {
+      s.catalog.dropTempView(name)
+      deleteRecursively(ck)
+      deleteRecursively(outDir)
+    }
+  }
+
+  /** The events file as a stream: the whole file, or with `replay` the
+    * staged slices, one per micro-batch. */
+  private def eventsStream(s: SparkSession, d: String, replay: Boolean): DataFrame = {
+    val (path, schema) = eventsSource(s, d, replay)
+    val reader = s.readStream.schema(schema)
+    if (replay) reader.option("maxFilesPerTrigger", "1").parquet(path)
+    else reader.option("pathGlobFilter", "events.parquet").parquet(path)
+  }
+
+  /** The events source a drained query streams from: its path and
+    * schema, probed once per (fixture identity, replay). Each probe is
+    * a file listing + footer read; the replay probe also stages the
+    * slices. The key carries the fixture files' (max-mtime, total
+    * length) so a dataset REGENERATED at the same path — with another
+    * schema or other rows — re-probes and re-stages instead of
+    * silently reading the stale one. A parquet dataset path is usually
+    * a DIRECTORY of part files, and an in-place rewrite may leave the
+    * directory inode's own (mtime, length) unchanged, hence the
+    * contained files (a single-file layout degenerates to the file
+    * itself). Superseded entries are a StructType and a staged dir,
+    * left to sit until the JVM's shutdown hook. */
+  private final case class SourceKey(dir: String, mtime: Long, len: Long,
+      replay: Boolean)
+  private val sources =
+    new java.util.concurrent.ConcurrentHashMap[SourceKey, (String, StructType)]()
+  private def eventsSource(s: SparkSession, d: String,
+      replay: Boolean): (String, StructType) = {
+    val f = new java.io.File(s"$d/events.parquet")
+    val files = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq(f))
+    val key = SourceKey(d, (f.lastModified +: files.map(_.lastModified)).max,
+      files.map(_.length).sum, replay)
+    sources.computeIfAbsent(key, _ =>
+      if (replay) { val dir = stageSlices(s, d); (dir, s.read.parquet(dir).schema) }
+      else (d, s.read.parquet(s"$d/events.parquet").schema))
+  }
+
+  /** Stage the events fixture into three TIME-CONTIGUOUS single-file
     * parquet slices with ascending mtimes under a scoped dir. A file
     * source reading the dir with `maxFilesPerTrigger=1` then replays
-    * the fixture as `n` micro-batches in event-time order — the
+    * the fixture as three micro-batches in event-time order — the
     * multi-micro-batch regime an unbounded production stream actually
     * runs in (watermark advancing batch over batch, join/agg state
     * evicted between batches), instead of one batch dominating the
@@ -143,28 +256,14 @@ object Streaming {
     * break the >= 3-micro-batch law the gate specs assert
     * (ntile's global sort is a harness-staging cost, not a query cost).
     *
-    * The staged dir is MEMOIZED per (fixture identity, n) for the JVM:
-    * staging is pure harness setup — a production stream reads files
-    * that already exist — so re-writing the slices inside every
-    * invocation's timed path was pure overhead (~17.6 s of the calm
-    * 145 s round-13 bench total was the four multi-batch queries, a
-    * chunk of it re-staging). The key carries the fixture files'
-    * (max-mtime, total length) so a regenerated fixture re-stages;
-    * staged dirs are deleted by a JVM shutdown hook. */
-  private final case class StageKey(dir: String, mtime: Long, len: Long,
-      n: Int)
-  private val stagedCache =
-    new java.util.concurrent.ConcurrentHashMap[StageKey, String]()
-  private def stageEventsByTime(s: SparkSession, d: String,
-      n: Int = 3): String = {
-    val f = new java.io.File(s"$d/events.parquet")
-    val files = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq(f))
-    val key = StageKey(d, (f.lastModified +: files.map(_.lastModified)).max,
-      files.map(_.length).sum, n)
-    stagedCache.computeIfAbsent(key, _ => stageSlices(s, d, n))
-  }
-
-  private def stageSlices(s: SparkSession, d: String, n: Int): String = {
+    * The staged dir is MEMOIZED by [[eventsSource]]: staging is pure
+    * harness setup — a production stream reads files that already
+    * exist — so re-writing the slices inside every invocation's timed
+    * path was pure overhead (~17.6 s of the calm 145 s round-13 bench
+    * total was the four multi-batch queries, a chunk of it
+    * re-staging). Staged dirs are deleted by a JVM shutdown hook. */
+  private def stageSlices(s: SparkSession, d: String): String = {
+    val n = 3
     val dir = scopedCheckpoint("staged_" +
       java.util.UUID.randomUUID().toString.replace("-", ""))
     new java.io.File(dir).mkdirs()
@@ -194,71 +293,27 @@ object Streaming {
     dir
   }
 
-  /** events.parquet schema, probed once per dataset (each probe is a
-    * file listing + footer read; five streaming queries share it). The
-    * key carries the file's (mtime, length) so a dataset REGENERATED at
-    * the same path with a different schema re-probes instead of
-    * silently reading with the stale one; superseded entries are a few
-    * StructType objects, left to sit. */
-  private final case class SchemaKey(dir: String, mtime: Long, len: Long)
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[SchemaKey, org.apache.spark.sql.types.StructType]()
-  private def eventsSchema(s: SparkSession, d: String) = {
-    val f = new java.io.File(s"$d/events.parquet")
-    // A parquet dataset path is usually a DIRECTORY of part files, and
-    // an in-place rewrite may leave the directory inode's own
-    // (mtime, length) unchanged — key on the contained files'
-    // max-mtime and total length instead (a single-file layout
-    // degenerates to the file itself).
-    val files = Option(f.listFiles()).map(_.toSeq).getOrElse(Seq(f))
-    val mtime = (f.lastModified +: files.map(_.lastModified)).max
-    val len = files.map(_.length).sum
-    schemaCache.computeIfAbsent(SchemaKey(d, mtime, len),
-      _ => s.read.parquet(s"$d/events.parquet").schema)
-  }
-
-  /** Finish a drained memory-sink query, then DROP the sink's temp view
-    * so repeated invocations don't leak per-UUID tables (and their
-    * rows) into the shared session catalog. Memory-sink rows already
-    * live on the driver, so localizing the (small, post-aggregation)
-    * result before the drop costs nothing extra. */
-  private def finishAndDrop(s: SparkSession, name: String)(finish: DataFrame => DataFrame): DataFrame = {
-    val out = finish(s.table(name))
-    val rows = java.util.Arrays.asList(out.collect(): _*)
-    try s.createDataFrame(rows, out.schema)
-    finally s.catalog.dropTempView(name)
-  }
-
   /** Event-time tumbling-window counts, executed as a real streaming
     * query (file source → complete-mode memory sink, drained with
     * processAllAvailable). */
-  val qStreamHourly: Q = (parent, d) => onStreamSession(parent) { s =>
-    val schema = eventsSchema(s, d)
-    val name = "stream_hourly_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+  val qStreamHourly: Q = (parent, d) =>
+    drain(parent, d, "q_stream_hourly", "complete")(_
       .transform(Tables.normalizeTs)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v"))
-    val q = stream.writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name)(_
+      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v")))(_
       .select(unix_millis(col("window.start")).as("hour_ms"), col("event_type"),
         col("n"), col("sum_v"))
       .orderBy("hour_ms", "event_type"))
-  }
 
   /** Daily rollup driven through a `foreachBatch` PRODUCTION sink —
     * the standard exactly-once upsert recipe onto a sink with no
     * transactions. Update mode emits each micro-batch's CHANGED daily
     * windows; the batch function writes them to a parquet table
     * PARTITIONED BY THE FULL GROUPING KEY under dynamic partition
-    * overwrite, so re-emitting a group replaces exactly that group's
-    * partition and a checkpoint-replayed batch lands idempotently
-    * (last-writer-wins per group). Partition key == upsert key is the
+    * overwrite ([[Sink.Upsert]]), so re-emitting a group replaces
+    * exactly that group's partition and a checkpoint-replayed batch
+    * lands idempotently (last-writer-wins per group). Partition key ==
+    * upsert key is the
     * correctness condition: update mode emits only CHANGED groups, so
     * a partition coarser than the grouping key (e.g. day only, when
     * the key is day × event_type) would overwrite a whole day with
@@ -271,45 +326,23 @@ object Streaming {
     * files are scoped to the invocation and removed after
     * localization. (Window grain day, not hour: one partition dir per
     * window means the grain sets the object count — the same
-    * object-budget trade as the imaging store's shard size.) */
-  val qStreamFbatch: Q = (parent, d) => onStreamSession(parent) { s =>
-    val name = "stream_fbatch_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val outDir = scopedCheckpoint(name + "_out")
-    // multi-batch replay (3 time-contiguous slices): each micro-batch
-    // upserts only ITS changed (day, type) groups, so the
-    // partition-key==upsert-key condition is actually exercised — a
-    // single-batch drain would mask a too-coarse partition key
-    val staged = stageEventsByTime(s, d)
-    val agg = s.readStream.schema(s.read.parquet(staged).schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
+    * object-budget trade as the imaging store's shard size.)
+    * Multi-batch replay (3 time-contiguous slices): each micro-batch
+    * upserts only ITS changed (day, type) groups, so the
+    * partition-key==upsert-key condition is actually exercised — a
+    * single-batch drain would mask a too-coarse partition key. */
+  val qStreamFbatch: Q = (parent, d) =>
+    drain(parent, d, "q_stream_fbatch", "update", replay = true,
+        sink = Sink.Upsert("day_ms", "event_type"))(_
       .transform(Tables.normalizeTs)
       .withWatermark("ts", "10 seconds")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v"))
       .select(unix_millis(col("window.start")).as("day_ms"), col("event_type"),
-        col("n"), col("sum_v"))
-    val upsert: (DataFrame, Long) => Unit = (batch, _) => {
-      batch.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("day_ms", "event_type")
-        .parquet(outDir)
-      ()
-    }
-    val q = agg.writeStream.outputMode("update")
-      .option("checkpointLocation", ck)
-      .foreachBatch(upsert).start()
-    drainScoped(q, ck)
-    progressTrail.put("q_stream_fbatch", q.recentProgress)
-    try {
-      val out = s.read.parquet(outDir)
-        .select(col("day_ms").cast("long"), col("event_type"), col("n"),
-          col("sum_v"))
-        .orderBy("day_ms", "event_type")
-      val rows = java.util.Arrays.asList(out.collect(): _*)
-      s.createDataFrame(rows, out.schema)
-    } finally deleteRecursively(outDir)
-  }
+        col("n"), col("sum_v")))(_
+      .select(col("day_ms").cast("long"), col("event_type"), col("n"),
+        col("sum_v"))
+      .orderBy("day_ms", "event_type"))
 
   /** Streaming heavy hitters: per-hour top-3 users by event count, the
     * leaderboard every ops dashboard runs on a firehose. The STREAMING
@@ -321,20 +354,11 @@ object Streaming {
     * trim runs over the drained sink — exactly where a production
     * dashboard ranks, on the store the stream maintains. Ties break to
     * the lower user_id. */
-  val qStreamTopk: Q = (parent, d) => onStreamSession(parent) { s =>
-    val schema = eventsSchema(s, d)
-    val name = "stream_topk_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+  val qStreamTopk: Q = (parent, d) =>
+    drain(parent, d, "q_stream_topk", "complete")(_
       .transform(Tables.normalizeTs)
       .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-    val q = stream.writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name) { t =>
+      .agg(count(lit(1)).as("n"))) { t =>
       val ranked = t.select(unix_millis(col("window.start")).as("hour_ms"),
           col("user_id"), col("n"))
         .withColumn("rk", row_number().over(
@@ -343,7 +367,6 @@ object Streaming {
         .select("hour_ms", "rk", "user_id", "n")
         .orderBy("hour_ms", "rk")
     }
-  }
 
   /** Sessionization: a session breaks after 30 idle minutes. Batch
     * window-function form (the flatMapGroupsWithState streaming form
@@ -371,25 +394,15 @@ object Streaming {
     * contract. The final no-data micro-batch advances the watermark to
     * max(ts) - 10 min, so every window ending at or before that point
     * flushes; the oracle applies the same cutoff. */
-  val qStreamHourlyWm: Q = (parent, d) => onStreamSession(parent) { s =>
-    val schema = eventsSchema(s, d)
-    val name = "stream_wm_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+  val qStreamHourlyWm: Q = (parent, d) =>
+    drain(parent, d, "q_stream_hourly_wm", "append")(_
       .transform(Tables.normalizeTs)
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name)(_
+      .agg(count(lit(1)).as("n")))(_
       .select(unix_millis(col("window.start")).as("hour_ms"), col("event_type"),
         col("n"))
       .orderBy("hour_ms", "event_type"))
-  }
 
   /** Streaming exact dedup: the event stream unioned with itself (every
     * event duplicated) flows through dropDuplicatesWithinWatermark on
@@ -401,16 +414,8 @@ object Streaming {
     * plain batch profile: dedup must exactly undo the self-union (the
     * duplicate arrives in the same micro-batch, well inside the
     * horizon). */
-  val qStreamDedup: Q = (parent, d) => onStreamSession(parent) { s =>
-    val schema = eventsSchema(s, d)
-    val name = "stream_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    // Duplicate every event IN-stream (explode over two copies) rather
-    // than unioning the source with itself: identical duplicated input
-    // for the dedup operator under test, but ONE file source — half
-    // the scan and offset tracking per micro-batch.
-    val src = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
+  val qStreamDedup: Q = (parent, d) =>
+    drain(parent, d, "q_stream_dedup", "append")(_
       .transform(Tables.normalizeTs)
       // project to the dedup key + watermark column + the one column
       // the audit aggregates BEFORE the stateful operator: the state
@@ -418,60 +423,38 @@ object Streaming {
       // 3 narrow columns instead of the full event row (the wide sink
       // showed up as a 92 MB single-task ship at sf4)
       .select(col("ts"), col("event_id"), col("event_type"))
-    val q = src
+      // Duplicate every event IN-stream (explode over two copies) rather
+      // than unioning the source with itself: identical duplicated input
+      // for the dedup operator under test, but ONE file source — half
+      // the scan and offset tracking per micro-batch.
       .withColumn("copy", explode(array(lit(0), lit(1)))).drop("copy")
       .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name)(_
+      .dropDuplicatesWithinWatermark("event_id"))(_
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), countDistinct("event_id").as("nd"))
       .orderBy("event_type"))
-  }
 
   /** Stream-stream interval join: purchases matched to every click by
     * the same user in the preceding hour, both sides watermarked (the
     * range condition is what lets Spark bound join state). Inner join
     * emission doesn't wait on the watermark, so the drained result is
-    * exactly the batch join — which is the oracle. */
-  val qStreamJoin: Q = (parent, d) => onStreamSession(parent) { s =>
-    val name = "stream_join_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    // three time-contiguous slices, one micro-batch each: the join
-    // runs in the production regime — watermark advancing batch over
-    // batch, state admitted in one batch and matched/evicted in a
-    // later one — with the drained result still the batch oracle's
-    val staged = stageEventsByTime(s, d)
-    val schema = s.read.parquet(staged).schema
-    def src = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
-      .transform(Tables.normalizeTs)
-      .where(col("user_id") % 10 === 0)
-    val clicks = src.where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    val purchases = src.where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    val q = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    progressTrail.put("q_stream_join", q.recentProgress)
-    finishAndDrop(s, name)(_
+    * exactly the batch join — which is the oracle. Three
+    * time-contiguous slices, one micro-batch each: the join runs in
+    * the production regime — watermark advancing batch over batch,
+    * state admitted in one batch and matched/evicted in a later one —
+    * with the drained result still the batch oracle's. Each side reads
+    * its own file source; sharing one, as the outer joins do, measured
+    * at parity (OPTIMIZATION_r16.md §5). */
+  val qStreamJoin: Q = (parent, d) =>
+    drain(parent, d, "q_stream_join", "append", replay = true) { clicks =>
+      intervalJoin(clicks, eventsStream(clicks.sparkSession, d, replay = true),
+        0, "inner")
+    }(_
       .groupBy(col("c_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"),
         countDistinct("purchase_id").as("n_purch"),
         countDistinct("click_id").as("n_clicks"))
       .orderBy("user_id"))
-  }
 
   /** Stream-stream LEFT-OUTER interval join (round-10 verdict item 4):
     * the state-EVICTION semantics made observable. Matched pairs emit
@@ -487,36 +470,30 @@ object Streaming {
     * (watermark is ms-floored: Spark's EventTimeStats tracks event
     * time in ms, so the oracle compares at ms grain too). State is
     * bounded by the 1 h + 10 min horizon per side at any scale; the
-    * only shuffle is the user-keyed symmetric-hash join. */
-  val qStreamJoinOuter: Q = (parent, d) => onStreamSession(parent) { s =>
-    val name = "stream_join_outer_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    // multi-batch replay (3 time-contiguous slices): unmatched clicks
-    // now flush on MID-STREAM watermark advances, not only at the
-    // final cut — the eviction path a production firehose exercises
-    val staged = stageEventsByTime(s, d)
-    val src = s.readStream.schema(s.read.parquet(staged).schema)
-      .option("maxFilesPerTrigger", "1").parquet(staged)
-    val q = joinOuterLogic(src)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    progressTrail.put("q_stream_join_outer", q.recentProgress)
-    finishAndDrop(s, name)(joinOuterFinish)
-  }
+    * only shuffle is the user-keyed symmetric-hash join. Multi-batch
+    * replay (3 time-contiguous slices): unmatched clicks flush on
+    * MID-STREAM watermark advances, not only at the final cut — the
+    * eviction path a production firehose exercises. */
+  val qStreamJoinOuter: Q = (parent, d) =>
+    drain(parent, d, "q_stream_join_outer", "append", replay = true)(
+      joinOuterLogic)(joinOuterFinish)
 
-  /** The left-outer interval-join plan on a raw events stream — shared
-    * by [[qStreamJoinOuter]] and the checkpoint-restart RecoverySpec,
-    * so recovery is proven on the exact production plan. */
-  private[graft] def joinOuterLogic(events: DataFrame): DataFrame = {
-    def src = events
+  /** Purchases joined to clicks by the same user within the click's
+    * following hour, on the user sample `user_id % 10 == sample`, both
+    * sides watermarked at 10 minutes — the interval-join plan of
+    * [[qStreamJoin]], [[qStreamJoinOuter]] and [[qStreamJoinFull]].
+    * Clicks come from `clickEvents`, purchases from `purchaseEvents`:
+    * one events stream, or one source per side. */
+  private def intervalJoin(clickEvents: DataFrame, purchaseEvents: DataFrame,
+      sample: Int, joinType: String): DataFrame = {
+    def src(events: DataFrame) = events
       .transform(Tables.normalizeTs)
-      .where(col("user_id") % 10 === 0)
-    val clicks = src.where(col("event_type") === "click")
+      .where(col("user_id") % 10 === sample)
+    val clicks = src(clickEvents).where(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
         col("ts").as("c_ts"))
       .withWatermark("c_ts", "10 minutes")
-    val purchases = src.where(col("event_type") === "purchase")
+    val purchases = src(purchaseEvents).where(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
         col("ts").as("p_ts"))
       .withWatermark("p_ts", "10 minutes")
@@ -524,8 +501,14 @@ object Streaming {
       col("c_user") === col("p_user") &&
       col("p_ts") >= col("c_ts") &&
       col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-      "left_outer")
+      joinType)
   }
+
+  /** The left-outer interval-join plan on a raw events stream — shared
+    * by [[qStreamJoinOuter]] and the checkpoint-restart RecoverySpec,
+    * so recovery is proven on the exact production plan. */
+  private[graft] def joinOuterLogic(events: DataFrame): DataFrame =
+    intervalJoin(events, events, 0, "left_outer")
 
   /** Stream-stream FULL-outer interval join — completes the streaming
     * join matrix (inner [[qStreamJoin]], left-outer
@@ -539,44 +522,19 @@ object Streaming {
     * range condition. Disjoint user sample (% 10 = 1) from the other
     * interval joins. State on each side is bounded by its eviction
     * horizon — watermark delay + the hour window — never stream
-    * length. */
-  val qStreamJoinFull: Q = (parent, d) => onStreamSession(parent) { s =>
-    val name = "stream_joinfull_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    // multi-batch replay (3 time-contiguous slices): BOTH sides'
-    // asymmetric eviction bounds fire on mid-stream watermark advances
-    val staged = stageEventsByTime(s, d)
-    val q = joinFullLogic(s.readStream.schema(s.read.parquet(staged).schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    progressTrail.put("q_stream_join_full", q.recentProgress)
-    finishAndDrop(s, name)(joinFullFinish)
-  }
+    * length. Multi-batch replay (3 time-contiguous slices): BOTH
+    * sides' asymmetric eviction bounds fire on mid-stream watermark
+    * advances. */
+  val qStreamJoinFull: Q = (parent, d) =>
+    drain(parent, d, "q_stream_join_full", "append", replay = true)(
+      joinFullLogic)(joinFullFinish)
 
   /** The full-outer interval-join plan on a raw events stream — shared
     * by [[qStreamJoinFull]] and the checkpoint-restart RecoverySpec,
     * so BOTH sides' eviction recovery is proven on the exact
     * production plan. */
-  private[graft] def joinFullLogic(events: DataFrame): DataFrame = {
-    def src = events
-      .transform(Tables.normalizeTs)
-      .where(col("user_id") % 10 === 1)
-    val clicks = src.where(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("event_id").as("click_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "10 minutes")
-    val purchases = src.where(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("p_ts"))
-      .withWatermark("p_ts", "10 minutes")
-    clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-      col("p_ts") >= col("c_ts") &&
-      col("p_ts") <= col("c_ts") + expr("INTERVAL 1 HOUR"),
-      "full_outer")
-  }
+  private[graft] def joinFullLogic(events: DataFrame): DataFrame =
+    intervalJoin(events, events, 1, "full_outer")
 
   /** Contraction of the drained full-outer rows to the oracle shape. */
   private[graft] def joinFullFinish(df: DataFrame): DataFrame = df
@@ -606,23 +564,16 @@ object Streaming {
     * decorating a 100 TB/day event firehose with dimension attributes.
     * The dim is broadcast: the stream side never shuffles for the
     * join; the only stateful operator is the final rollup. */
-  val qStreamStaticJoin: Q = (parent, d) => onStreamSession(parent) { s =>
-    val schema = eventsSchema(s, d)
-    val name = "stream_static_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val dim = Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"))
-    val q = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-      .transform(Tables.normalizeTs)
-      .where(col("event_type") === "purchase")
-      .join(broadcast(dim), col("user_id") === col("c_custkey"))
-      .groupBy("c_mktsegment")
-      .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v"))
-      .writeStream.outputMode("complete").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name)(_.orderBy("c_mktsegment"))
-  }
+  val qStreamStaticJoin: Q = (parent, d) =>
+    drain(parent, d, "q_stream_static_join", "complete") { src =>
+      val dim = Tables.customer(src.sparkSession, d)
+        .select(col("c_custkey"), col("c_mktsegment"))
+      src.transform(Tables.normalizeTs)
+        .where(col("event_type") === "purchase")
+        .join(broadcast(dim), col("user_id") === col("c_custkey"))
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n"), round(sum("value"), 2).as("sum_v"))
+    }(_.orderBy("c_mktsegment"))
 
   /** Stateful session windows as a REAL streaming query — the
     * [[graft.streaming.Sessionizer]] flatMapGroupsWithState path
@@ -637,49 +588,23 @@ object Streaming {
     * record per active user: at 100 TB of events the store scales with
     * ACTIVE-user cardinality, not event volume, and the only shuffle
     * is the groupByKey on user_id. */
-  val qStreamSessions: Q = (parent, d) => onStreamSession(parent) { s =>
-    val schema = eventsSchema(s, d)
-    val name = "stream_sess_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val src = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-    val q = sessionsLogic(src)
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name)(sessionsFinish)
-  }
+  val qStreamSessions: Q = (parent, d) =>
+    drain(parent, d, "q_stream_sessions", "append")(sessionsLogic)(sessionsFinish)
 
   /** [[qStreamSessions]] through the PRODUCTION parquet FILE sink —
     * the path a deployment actually runs (the memory sink is a demo
     * drain). The sessionization plan streams into a parquet directory
     * whose `_spark_metadata` commit log is the sink's exactly-once
     * mechanism; the result is then read BACK through that commit log
-    * (a plain `spark.read.parquet` on the sink dir resolves committed
-    * files only) and hash-gated against the SAME DuckDB oracle as the
-    * memory-sink twin. RecoverySpec drives this exact plan+sink
+    * ([[Sink.Files]]) and hash-gated against the SAME DuckDB oracle as
+    * the memory-sink twin. RecoverySpec drives this exact plan+sink
     * combination through a kill-after-batch-0 restart, so the entry
     * chains end-to-end: production sink, crash recovery, and oracle
     * hash on one plan. Sink files are scoped to the invocation and
-    * removed after localization, like every demo drain. */
-  val qStreamSessionsFsink: Q = (parent, d) => onStreamSession(parent) { s =>
-    val schema = eventsSchema(s, d)
-    val name = "stream_sessf_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val outDir = scopedCheckpoint(name + "_out")
-    val src = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-    val q = sessionsLogic(src)
-      .writeStream.outputMode("append").format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    try {
-      val out = sessionsFinish(s.read.parquet(outDir))
-      val rows = java.util.Arrays.asList(out.collect(): _*)
-      s.createDataFrame(rows, out.schema)
-    } finally deleteRecursively(outDir)
-  }
+    * removed with its checkpoint, like every demo drain. */
+  val qStreamSessionsFsink: Q = (parent, d) =>
+    drain(parent, d, "q_stream_sessions_fsink", "append", sink = Sink.Files)(
+      sessionsLogic)(sessionsFinish)
 
   /** The flatMapGroupsWithState sessionization plan on a raw events
     * stream — shared by [[qStreamSessions]], its file-sink twin
@@ -742,26 +667,20 @@ object Streaming {
     * contraction is batch-count independent. State: ONE row per
     * entity — at 100 TB it scales with dimension cardinality, not
     * event volume, the same law as the sessionizer. */
-  val qStreamCdc: Q = (parent, d) => onStreamSession(parent) { s =>
-    import s.implicits._
-    val schema = eventsSchema(s, d)
-    val name = "stream_cdc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val src = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-      .transform(Tables.normalizeTs)
-      .where(col("user_id") % 15 === 0)
-      .select(col("user_id").as("userId"), unix_millis(col("ts")).as("tsMs"),
-        col("event_id").as("eventId"), col("event_type").as("etype"))
-      .as[CdcEvent]
-    val q = src.groupByKey(_.userId)
-      .mapGroupsWithState(
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(cdcUpdate)
-      .toDF()
-      .writeStream.outputMode("update").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name) { df =>
+  val qStreamCdc: Q = (parent, d) =>
+    drain(parent, d, "q_stream_cdc", "update") { src =>
+      val s = src.sparkSession
+      import s.implicits._
+      src.transform(Tables.normalizeTs)
+        .where(col("user_id") % 15 === 0)
+        .select(col("user_id").as("userId"), unix_millis(col("ts")).as("tsMs"),
+          col("event_id").as("eventId"), col("event_type").as("etype"))
+        .as[CdcEvent]
+        .groupByKey(_.userId)
+        .mapGroupsWithState(
+          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(cdcUpdate)
+        .toDF()
+    } { df =>
       val w = Window.partitionBy("userId").orderBy(col("nUpdates").desc)
       df.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
         .select(col("userId").as("user_id"), col("etype").as("last_type"),
@@ -769,7 +688,6 @@ object Streaming {
           col("nUpdates").as("n_updates"))
         .orderBy("user_id")
     }
-  }
 
   /** Sessions with per-session type diversity on the Spark 4
     * `transformWithState` path — [[graft.streaming.TypeSessionizer]]'s
@@ -783,18 +701,8 @@ object Streaming {
     * session (the session-isolation pattern all streaming queries here
     * use), so no other query observes it. Disjoint user sample
     * (user_id % 9 = 4) from the v1 sessions query. */
-  val qStreamTws: Q = (parent, d) => onStreamSession(parent) { s =>
-    useRocksDb(s)
-    val schema = eventsSchema(s, d)
-    val name = "stream_tws_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val q = twsLogic(s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d))
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name)(twsFinish)
-  }
+  val qStreamTws: Q = (parent, d) =>
+    drain(parent, d, "q_stream_tws", "append", rocksDb = true)(twsLogic)(twsFinish)
 
   /** The transformWithState plan on a raw events stream — shared by
     * [[qStreamTws]] and the checkpoint-restart RecoverySpec, so v2
@@ -832,18 +740,8 @@ object Streaming {
     * cutoff. Disjoint user sample (% 11 = 5) from the other three.
     * State is one merged-window record per (user, open session) —
     * active-user cardinality, not event volume. */
-  val qStreamSessWin: Q = (parent, d) => onStreamSession(parent) { s =>
-    val schema = eventsSchema(s, d)
-    val name = "stream_sesswin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val q = sessWinLogic(s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(d))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name)(sessWinFinish)
-  }
+  val qStreamSessWin: Q = (parent, d) =>
+    drain(parent, d, "q_stream_sesswin", "append")(sessWinLogic)(sessWinFinish)
 
   /** The native session_window plan on a raw events stream — shared by
     * [[qStreamSessWin]] and the checkpoint-restart RecoverySpec, so
@@ -880,56 +778,51 @@ object Streaming {
     * watermark). Disjoint sample (% 9 = 7) from [[qStreamTws]].
     * At 100 TB this is the migration path: fold years of history at
     * batch prices, hand the open tails to the stream. */
-  val qStreamTwsBoot: Q = (parent, d) => onStreamSession(parent) { s =>
-    useRocksDb(s)
-    import s.implicits._
-    import graft.streaming.TypeSessionizer.{BootState, TSession}
-    val ev = Tables.events(s, d).where(col("user_id") % 9 === 7)
-      .select(col("user_id").as("userId"), unix_millis(col("ts")).as("tsMs"),
-        col("event_id").as("eventId"), col("event_type").as("etype"))
-    // midpoint split: one bounded driver agg (2 longs)
-    val mm = ev.agg(min("tsMs"), max("tsMs")).head()
-    val mid = (mm.getLong(0) + mm.getLong(1)) / 2
-    // batch fold of the first half: gap-split sessions per user
-    val wOrd = Window.partitionBy("userId").orderBy("tsMs", "eventId")
-    val sess = ev.where(col("tsMs") < mid)
-      .withColumn("gap", col("tsMs") - lag("tsMs", 1).over(wOrd))
-      .withColumn("brk",
-        when(col("gap").isNull || col("gap") > 1800000L, 1).otherwise(0))
-      .withColumn("sid", sum("brk").over(
-        wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy("userId", "sid")
-      .agg(min("tsMs").as("start"), max("tsMs").as("last"),
-        count(lit(1)).as("n"), sort_array(collect_set("etype")).as("types"))
-      .withColumn("lastSid",
-        max("sid").over(Window.partitionBy("userId")))
-    val closed = sess.where(col("sid") < col("lastSid"))
-      .select(col("userId"), col("start").as("startMs"), col("last").as("endMs"),
-        col("n").as("nEvents"), size(col("types")).cast("long").as("nTypes"))
-      .as[TSession]
-    val boot = sess.where(col("sid") === col("lastSid"))
-      .select(col("userId"), col("start"), col("last"), col("n"), col("types"))
-      .as[(Long, Long, Long, Long, Seq[String])]
-      .map { case (u, st, la, n, ty) => (u, BootState(st, la, n, ty)) }
-      .groupByKey(_._1).mapValues(_._2)
-    val name = "stream_twsboot_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val ck = scopedCheckpoint(name)
-    val schema = eventsSchema(s, d)
-    val typed = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(d)
-      .transform(Tables.normalizeTs)
-      .where(col("user_id") % 9 === 7)
-      .select(col("user_id").as("userId"), unix_millis(col("ts")).as("tsMs"),
-        col("event_id").as("eventId"), col("event_type").as("etype"))
-      .where(col("tsMs") >= mid)
-      .as[graft.streaming.TypeSessionizer.TEvent]
-    val q = graft.streaming.TypeSessionizer
-      .sessionizeWithInit(typed, boot, 1800000L, "10 seconds").toDF()
-      .writeStream.outputMode("append").format("memory").queryName(name)
-      .option("checkpointLocation", ck).start()
-    drainScoped(q, ck)
-    finishAndDrop(s, name)(streamed =>
-      twsFinish(streamed.unionByName(closed.toDF())))
+  val qStreamTwsBoot: Q = (parent, d) => {
+    // the batch-folded closed sessions: built by the plan, on the
+    // query's own session, and unioned into the result by the finish
+    var closed: DataFrame = null
+    drain(parent, d, "q_stream_tws_boot", "append", rocksDb = true) { src =>
+      val s = src.sparkSession
+      import s.implicits._
+      import graft.streaming.TypeSessionizer.{BootState, TEvent, TSession}
+      val ev = Tables.events(s, d).where(col("user_id") % 9 === 7)
+        .select(col("user_id").as("userId"), unix_millis(col("ts")).as("tsMs"),
+          col("event_id").as("eventId"), col("event_type").as("etype"))
+      // midpoint split: one bounded driver agg (2 longs)
+      val mm = ev.agg(min("tsMs"), max("tsMs")).head()
+      val mid = (mm.getLong(0) + mm.getLong(1)) / 2
+      // batch fold of the first half: gap-split sessions per user
+      val wOrd = Window.partitionBy("userId").orderBy("tsMs", "eventId")
+      val sess = ev.where(col("tsMs") < mid)
+        .withColumn("gap", col("tsMs") - lag("tsMs", 1).over(wOrd))
+        .withColumn("brk",
+          when(col("gap").isNull || col("gap") > 1800000L, 1).otherwise(0))
+        .withColumn("sid", sum("brk").over(
+          wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .groupBy("userId", "sid")
+        .agg(min("tsMs").as("start"), max("tsMs").as("last"),
+          count(lit(1)).as("n"), sort_array(collect_set("etype")).as("types"))
+        .withColumn("lastSid",
+          max("sid").over(Window.partitionBy("userId")))
+      closed = sess.where(col("sid") < col("lastSid"))
+        .select(col("userId"), col("start").as("startMs"), col("last").as("endMs"),
+          col("n").as("nEvents"), size(col("types")).cast("long").as("nTypes"))
+        .as[TSession].toDF()
+      val boot = sess.where(col("sid") === col("lastSid"))
+        .select(col("userId"), col("start"), col("last"), col("n"), col("types"))
+        .as[(Long, Long, Long, Long, Seq[String])]
+        .map { case (u, st, la, n, ty) => (u, BootState(st, la, n, ty)) }
+        .groupByKey(_._1).mapValues(_._2)
+      val typed = src.transform(Tables.normalizeTs)
+        .where(col("user_id") % 9 === 7)
+        .select(col("user_id").as("userId"), unix_millis(col("ts")).as("tsMs"),
+          col("event_id").as("eventId"), col("event_type").as("etype"))
+        .where(col("tsMs") >= mid)
+        .as[TEvent]
+      graft.streaming.TypeSessionizer
+        .sessionizeWithInit(typed, boot, 1800000L, "10 seconds").toDF()
+    }(streamed => twsFinish(streamed.unionByName(closed)))
   }
 
   def queries: Map[String, Q] = Map(

@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KnobGuardSpec extends AnyFunSuite {
   private val Deployment = Set("CPUS", "SF_DIR", "MIN_PART_SIZE",
-    "STATE_PROVIDER", "STREAM_PARTS", "ROCKSDB_TRACK_ROWS")
+    "STATE_PROVIDER", "STREAM_PARTS")
   private val Harness = Set("ONLY", "WARMUP", "PASSES", "LOOP",
     "MILD_RETRY", "BENCH_OUT", "PROBE_OUT")
 

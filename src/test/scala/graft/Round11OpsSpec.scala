@@ -185,36 +185,21 @@ class Round11OpsSpec extends AnyFunSuite {
       .map(_.toSeq).toSet
     val full = {
       // qStreamTws's plan re-pointed at the boot sample via a direct
-      // single-stream run on % 9 = 7
+      // single-stream run on % 9 = 7, through the same drain runner
       import org.apache.spark.sql.functions._
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      import s.implicits._
-      val schema = s.read.parquet(s"$SF/events.parquet").schema
-      val name = "twsboot_ref_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val ck = java.nio.file.Files.createTempDirectory("twsboot-ck").toString
-      val typed = s.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(SF)
-        .transform(Tables.normalizeTs)
-        .where(col("user_id") % 9 === 7)
-        .select(col("user_id").as("userId"), unix_millis(col("ts")).as("tsMs"),
-          col("event_id").as("eventId"), col("event_type").as("etype"))
-        .as[graft.streaming.TypeSessionizer.TEvent]
-      val q = graft.streaming.TypeSessionizer.sessionize(typed, 1800000L, "10 seconds")
-        .toDF()
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .option("checkpointLocation", ck).start()
-      try q.processAllAvailable() finally q.stop()
-      val out = s.table(name)
-        .select(col("userId").as("user_id"), col("startMs").as("start_ms"),
-          col("endMs").as("end_ms"), col("nEvents").as("n_events"),
-          col("nTypes").as("n_types"))
-        .collect().map(_.toSeq).toSet
-      s.catalog.dropTempView(name)
-      out
+      graft.queries.Streaming.drain(spark, SF, "twsboot_ref", "append",
+          rocksDb = true) { src =>
+        val s = src.sparkSession
+        import s.implicits._
+        val typed = src
+          .transform(Tables.normalizeTs)
+          .where(col("user_id") % 9 === 7)
+          .select(col("user_id").as("userId"), unix_millis(col("ts")).as("tsMs"),
+            col("event_id").as("eventId"), col("event_type").as("etype"))
+          .as[graft.streaming.TypeSessionizer.TEvent]
+        graft.streaming.TypeSessionizer.sessionize(typed, 1800000L, "10 seconds")
+          .toDF()
+      }(graft.queries.Streaming.twsFinish).collect().map(_.toSeq).toSet
     }
     assert(boot.nonEmpty && boot == full,
       s"handoff diverged: ${boot.size} boot rows vs ${full.size} full-stream rows")

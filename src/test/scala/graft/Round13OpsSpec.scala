@@ -79,6 +79,20 @@ class Round13OpsSpec extends AnyFunSuite {
     assertMultiBatchEviction("q_stream_join_full")
   }
 
+  test("memory-sink and file-sink drains record their batch trail") {
+    // every drained query files its trail, not only the multi-batch
+    // gates above: one memory-sink and one file-sink query
+    Seq("q_stream_hourly", "q_stream_sessions_fsink").foreach { name =>
+      graft.queries.Streaming.progressTrail.remove(name)
+      SparkEntry.queries(name)(spark, SF).collect()
+      val trail = progress(name)
+      assert(trail.exists(p => p.numInputRows > 0 &&
+        p.durationMs.containsKey("addBatch")),
+        s"$name: no data batch with an addBatch duration in its trail " +
+          s"(${trail.size} entries)")
+    }
+  }
+
   test("q_quality_ks equals an in-JVM brute-force KS on every (lang, source)") {
     // independent of BOTH engines' SQL: recompute the ppm-quantized
     // one-vs-rest KS from raw collected rows (sf0.001 = 5k docs) and
