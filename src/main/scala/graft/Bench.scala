@@ -14,17 +14,23 @@ package graft
   * written to `SPARK_GRAFT_BENCH_OUT` (default `bench_out.json`).
   */
 object Bench {
+
+  /** Warms up codegen and parquet footers, so the first measured query
+    * does not absorb one-time JVM and session costs (also the set-up of
+    * [[Probe]]). */
+  def warmUp(spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit = {
+    spark.range(1000).selectExpr("sum(id)").collect()
+    Tables.names.foreach { t =>
+      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.core.Sessions.local(conf = Seq(
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
         sys.env.getOrElse("SPARK_GRAFT_MIN_PART_SIZE", "1m")))
-    // Warm up codegen + parquet footers so the first measured query
-    // doesn't absorb one-time JVM/session costs.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    Tables.names.foreach { t =>
-      try Tables(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
+    warmUp(spark, sfDir)
     // Whole-host contention anchor, measured as a PAIR bracketing the
     // run (round-10 hygiene): a fixed single-threaded xorshift spin
     // whose calm-host time is a known constant. calib_pre vs

@@ -35,37 +35,6 @@ object MicroBench {
         topk()
         val heap = (1 to 3).map(_ => time(() => topk())).min
         println(f"""{"bench":"topk","rows":$rows,"keys":$keys,"window_sec":$window%.3f,"heap_sec":$heap%.3f,"speedup":${window / heap}%.2f}""")
-      case "imaging" =>
-        // end-to-end stack → OME-Zarr pyramid on a synthesized fixture:
-        // nz slices of ny×nx uint16 (default 32×2048×2048 = 256 MiB raw)
-        val nz = args.lift(1).map(_.toInt).getOrElse(32)
-        val ny = args.lift(2).map(_.toInt).getOrElse(2048)
-        val nx = args.lift(3).map(_.toInt).getOrElse(2048)
-        import java.nio.file.Files
-        val root = Files.createTempDirectory("graft-imaging-bench")
-        val stack = root.resolve("SmartSPIM/Ex_445_Em_469/440000/440000_460000")
-        Files.createDirectories(stack)
-        for (z <- 0 until nz) {
-          val px = new Array[Byte](ny * nx * 2)
-          var i = 0
-          while (i < ny * nx) {
-            val v = (z * 10007 + i * 13) % 65536
-            px(2 * i) = (v & 0xFF).toByte; px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-            i += 1
-          }
-          Files.write(stack.resolve(f"$z%06d.png"),
-            graft.imaging.ImageCodec.encodePng16(nx, ny, px))
-        }
-        val settings = graft.core.JobSettings(
-          inputSource = root.toString,
-          outputDirectory = root.resolve("out").toString,
-          downsampleLevels = 3)
-        val t0 = System.nanoTime()
-        graft.imaging.SmartSpimJob.convertStack(spark,
-          stack, settings, Seq(2.0, 1.8, 1.8))
-        val sec = (System.nanoTime() - t0) / 1e9
-        val rawMb = nz.toLong * ny * nx * 2 / (1024.0 * 1024.0)
-        println(f"""{"bench":"imaging","nz":$nz,"ny":$ny,"nx":$nx,"raw_mib":$rawMb%.0f,"sec":$sec%.2f,"mib_per_sec":${rawMb / sec}%.1f}""")
       case "zipf" =>
         // Straggler-vs-fix for corpus-frequency attach on a Zipf(1.0)
         // key (the q_quality_lm / q_mix_doremi / q_dedup_spans shape):
@@ -180,29 +149,6 @@ object MicroBench {
             .agg(sum("h")).collect(); 0L
         }
         println(f"""{"bench":"ac","dict":${dict.size},"native_sec":$nativeAc%.3f,"composed16_sec":$compSlice%.3f,"composed_scaled_sec":$compScaled%.3f,"speedup_scaled":${compScaled / nativeAc}%.1f,"regex_alt_sec":$regexSec%.3f,"speedup_vs_regex":${regexSec / nativeAc}%.1f}""")
-      case "blosc" =>
-        // codec throughput on a realistic 4 MiB uint16 chunk (smooth
-        // imagery — the shuffle filter's target case)
-        val n = 128 * 128 * 128 * 2
-        val data = new Array[Byte](n)
-        var i = 0
-        while (i < n / 2) { // smooth 16-bit ramp with mild noise
-          val v = (i / 64 + (i * 2654435761L % 7).toInt) & 0xFFFF
-          data(2 * i) = (v & 0xFF).toByte; data(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-          i += 1
-        }
-        import graft.imaging.BloscCodec
-        def mbps(reps: Int)(f: => Unit): Double = {
-          val t0 = System.nanoTime(); (1 to reps).foreach(_ => f)
-          n.toDouble * reps / ((System.nanoTime() - t0) / 1e9) / (1024 * 1024)
-        }
-        val frame = BloscCodec.compress(data, 2, 3, true)
-        mbps(20)(BloscCodec.compress(data, 2, 3, true)) // warm
-        val enc = mbps(50)(BloscCodec.compress(data, 2, 3, true))
-        mbps(20)(BloscCodec.decompress(frame))
-        val dec = mbps(50)(BloscCodec.decompress(frame))
-        val ratio = data.length.toDouble / frame.length
-        println(f"""{"bench":"blosc","chunk_mib":4,"encode_mibps":$enc%.0f,"decode_mibps":$dec%.0f,"ratio":$ratio%.2f}""")
       case "imaging-pooled" =>
         // pooled convertStacks (one pipeline for the whole shard) vs a
         // driver loop of per-stack conversions — the SCALE.md claim
@@ -214,21 +160,9 @@ object MicroBench {
         import java.nio.file.Files
         val root = Files.createTempDirectory("graft-imaging-pooled")
         val stacks = (0 until nStacks).map { si =>
-          val stack = root.resolve(
-            f"SmartSPIM/Ex_445_Em_469/${440000 + si}%06d/${440000 + si}%06d_460000")
-          Files.createDirectories(stack)
-          for (z <- 0 until nz) {
-            val px = new Array[Byte](2048 * 2048 * 2)
-            var i = 0
-            while (i < 2048 * 2048) {
-              val v = (si * 131 + z * 10007 + i * 13) % 65536
-              px(2 * i) = (v & 0xFF).toByte; px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-              i += 1
-            }
-            Files.write(stack.resolve(f"$z%06d.png"),
-              graft.imaging.ImageCodec.encodePng16(2048, 2048, px))
-          }
-          stack
+          graft.imaging.SyntheticStack.write(root.resolve(
+            f"SmartSPIM/Ex_445_Em_469/${440000 + si}%06d/${440000 + si}%06d_460000"),
+            nz, 2048, 2048)((z, y, x) => (si * 131 + z * 10007 + (y * 2048 + x) * 13) % 65536)
         }
         def settingsFor(out: String) = graft.core.JobSettings(
           inputSource = root.toString, outputDirectory = out,
@@ -249,44 +183,6 @@ object MicroBench {
         }
         val mb = nStacks.toLong * nz * 2048 * 2048 * 2 / (1024.0 * 1024.0)
         println(f"""{"bench":"imaging-pooled","stacks":$nStacks,"raw_mib":$mb%.0f,"pooled_sec":$pooled%.2f,"sequential_sec":$sequential%.2f,"speedup":${sequential / pooled}%.2f}""")
-      case "imaging-phases" =>
-        // phase timings over the same fixture as `imaging`
-        val nz = args.lift(1).map(_.toInt).getOrElse(32)
-        val ny = args.lift(2).map(_.toInt).getOrElse(2048)
-        val nx = args.lift(3).map(_.toInt).getOrElse(2048)
-        import java.nio.file.Files
-        val root = Files.createTempDirectory("graft-imaging-phases")
-        val stack = root.resolve("s")
-        Files.createDirectories(stack)
-        for (z <- 0 until nz) {
-          val px = new Array[Byte](ny * nx * 2)
-          var i = 0
-          while (i < ny * nx) {
-            val v = (z * 10007 + i * 13) % 65536
-            px(2 * i) = (v & 0xFF).toByte; px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-            i += 1
-          }
-          Files.write(stack.resolve(f"$z%06d.png"),
-            graft.imaging.ImageCodec.encodePng16(nx, ny, px))
-        }
-        import graft.imaging.SmartSpimPipeline
-        import spark.implicits._
-        def t(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val chunk = Seq(128, 128, 128)
-        val sl = SmartSpimPipeline.slices(spark, stack.toString, "png")
-        val decode = t { sl.map(_.data.length.toLong).reduce(_ + _) }
-        val rc = SmartSpimPipeline.rechunk(sl, chunk)
-        val rechunkT = t { rc.map(_.data.length.toLong).reduce(_ + _) }
-        rc.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        rc.count()
-        val writeT = t { SmartSpimPipeline.writeLevel(rc,
-          root.resolve("out").toString, 0, chunk, 3, byteShuffle = true,
-          compressed = true) }
-        val downT = t { SmartSpimPipeline.downsampleLevel(rc, chunk, Seq(2, 2, 2))
-          .map(_.data.length.toLong).reduce(_ + _) }
-        println(f"""{"bench":"imaging-phases","decode_sec":$decode%.2f,"decode_rechunk_sec":$rechunkT%.2f,"write_sec":$writeT%.2f,"downsample_sec":$downT%.2f}""")
       case "pyramid-fused" =>
         // Fused level-k downsample vs the iterated per-level path, both
         // consuming ONLY level k (the fused path's use case). In-memory

@@ -165,7 +165,7 @@ object Dedup {
     // stages to 32 tasks but their summed task time grew ~7x (25.2 s vs
     // 3.4 s) at wall parity — the probe stages are memory-bound, so
     // extra concurrency just burns CPU. Floor NOT applied here.
-    // Optimization round 17 (guide §2.2/§2.4, JobProbe-attributed):
+    // Optimization round 17 (guide §2.2/§2.4, `Probe jobs`-attributed):
     //  - `Tables.spread` parallelizes the tokenize+shingle pass and —
     //    the dominant cost — the candidate/verification joins that
     //    stream the cached shingle table (two single-task 1.2–1.5 s
@@ -360,7 +360,7 @@ object Dedup {
     // in the finally): referenced by the band explode, both verify-join
     // sides and the label init. A lazy .cache() here let concurrent
     // subtree builds duplicate the 16-perm signature aggregate (~4-6 s
-    // of task time re-spent per invocation — JobProbe round 17, the
+    // of task time re-spent per invocation — `Probe jobs` round 17, the
     // same race Scoped.share documents); the eager build
     // runs it once. The returned plan reads only checkpointed labels,
     // so the release cannot affect the result.

@@ -520,7 +520,7 @@ object Graph {
     // measured in optimization round 17 and REJECTED: Spark's shuffle
     // rows are UnsafeRows whose fixed-width fields occupy 8-byte slots
     // regardless of declared width, so the edge shuffle measured
-    // byte-identical (9613K vs 9615K in JobProbe) and the interleaved
+    // byte-identical (9613K vs 9615K in `Probe jobs`) and the interleaved
     // A/B read parity-to-noise. The "halve the column" lever applies
     // to strings->ints or columnar/compressed layouts, not to int64 ->
     // int32 inside row-format exchanges.

@@ -701,7 +701,7 @@ object Relational {
     // whose shuffles are CPU-bound rather than latency-bound.
     // eager share, not a lazy one (optimization round 17): the
     // lazy cache let AQE's concurrent subtree builds run the 375 KB
-    // corpus digest pass TWICE inside one invocation (JobProbe jobs
+    // corpus digest pass TWICE inside one invocation (`Probe jobs`: jobs
     // 134+144, ~640 ms of duplicate corpus scan+explode); eager
     // materialization builds it once and every downstream pass —
     // unroll, window, pair scan, exact audit — reads the blocks.

@@ -14,7 +14,7 @@ import graft.Tables
   * Every streaming query runs through one runner, [[drain]]. A query
   * supplies only its plan (events source → streaming frame) and its
   * finish (drained rows → result); the runner owns the rest:
-  *  - the child session ([[onStreamSession]]; RocksDB when asked);
+  *  - the child session ([[streamSession]]; RocksDB when asked);
   *  - the source: the whole events file, or the memoized three-slice
   *    time-contiguous replay ([[stageSlices]]), each with its
   *    memoized schema;
@@ -52,8 +52,7 @@ object Streaming {
     * need, again without touching the parent. Children are not closed
     * (closing would stop the shared context); an idle child session is
     * a few conf maps, collected with the reference. */
-  private def onStreamSession[T](parent: SparkSession, rocksDb: Boolean)(
-      body: SparkSession => T): T = {
+  private[graft] def streamSession(parent: SparkSession, rocksDb: Boolean): SparkSession = {
     val s = graft.core.Sessions.child(parent,
       "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "2"),
       "spark.sql.legacy.parquet.nanosAsLong" -> "true")
@@ -68,7 +67,7 @@ object Streaming {
     // own session conf. Queries that REQUIRE RocksDB pass `rocksDb`.
     if (rocksDb || sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
       useRocksDb(s)
-    body(s)
+    s
   }
 
   /** RocksDB provider + tuning for a child session (round 15, verdict
@@ -133,7 +132,7 @@ object Streaming {
     * evidence for the multi-batch gates (Round13OpsSpec asserts the
     * interval joins really crossed >= 3 micro-batches with state rows
     * evicted between them) and the per-batch addBatch / planning /
-    * commit split JobProbe prints. Overwritten per invocation; a few
+    * commit split `Probe jobs` prints. Overwritten per invocation; a few
     * small JSON-backed objects. */
   private[graft] val progressTrail =
     new java.util.concurrent.ConcurrentHashMap[String,
@@ -167,7 +166,8 @@ object Streaming {
   private[graft] def drain(parent: SparkSession, d: String, inventoryName: String,
       mode: String, replay: Boolean = false, sink: Sink = Sink.Memory,
       rocksDb: Boolean = false)(plan: DataFrame => DataFrame)(
-      finish: DataFrame => DataFrame): DataFrame = onStreamSession(parent, rocksDb) { s =>
+      finish: DataFrame => DataFrame): DataFrame = {
+    val s = streamSession(parent, rocksDb)
     val src = eventsStream(s, d, replay)
     val name = inventoryName + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val ck = scopedCheckpoint(name)

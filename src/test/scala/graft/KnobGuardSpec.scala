@@ -16,7 +16,7 @@ class KnobGuardSpec extends AnyFunSuite {
   private val Deployment = Set("CPUS", "SF_DIR", "MIN_PART_SIZE",
     "STATE_PROVIDER", "STREAM_PARTS")
   private val Harness = Set("ONLY", "WARMUP", "PASSES", "LOOP",
-    "MILD_RETRY", "BENCH_OUT", "PROBE_OUT")
+    "MILD_RETRY", "BENCH_OUT")
 
   test("src/main reads only the listed SPARK_GRAFT_* env vars") {
     val root = Paths.get(sys.props("user.dir"), "src", "main")

@@ -2,18 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One local session shared across suites (lazily created). */
+/** One local session shared across suites (lazily created): the entry
+  * points' factory at 4 cores, without the top-k planner rule (the
+  * specs that need it install it). */
 object SparkSessionTestWrapper {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    graft.core.LogHygiene.quietWindowWarnings()
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Sessions.local("4", topK = false)
 }

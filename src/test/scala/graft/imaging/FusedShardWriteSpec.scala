@@ -28,18 +28,8 @@ class FusedShardWriteSpec extends AnyFunSuite {
 
   private lazy val stack: Path = {
     val root = Files.createTempDirectory("graft-fused-shard")
-    val dir = root.resolve("SmartSPIM/Ex_488_Em_525/420000/420000_470000")
-    Files.createDirectories(dir)
-    for (z <- 0 until NZ) {
-      val px = new Array[Byte](NY * NX * 2)
-      for (y <- 0 until NY; x <- 0 until NX) {
-        val v = voxel(z, y, x); val i = y * NX + x
-        px(2 * i) = (v & 0xFF).toByte
-        px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-      }
-      Files.write(dir.resolve(f"$z%06d.png"), ImageCodec.encodePng16(NX, NY, px))
-    }
-    dir
+    SyntheticStack.write(root.resolve("SmartSPIM/Ex_488_Em_525/420000/420000_470000"),
+      NZ, NY, NX)(voxel)
   }
 
   private def slices = SmartSpimPipeline.slices(spark, stack.toString, "png")

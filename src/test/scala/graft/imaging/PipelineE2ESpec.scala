@@ -37,18 +37,8 @@ class PipelineE2ESpec extends AnyFunSuite {
   }
 
   private def writeFixture(root: java.nio.file.Path): java.nio.file.Path = {
-    val stack = root.resolve("SmartSPIM/Ex_445_Em_469/440000/440000_460000")
-    Files.createDirectories(stack)
-    for (z <- 0 until NZ) {
-      val px = new Array[Byte](NY * NX * 2)
-      for (y <- 0 until NY; x <- 0 until NX) {
-        val v = voxel(z, y, x); val i = y * NX + x
-        px(2 * i) = (v & 0xFF).toByte
-        px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-      }
-      Files.write(stack.resolve(f"$z%06d.png"), ImageCodec.encodePng16(NX, NY, px))
-    }
-    stack
+    SyntheticStack.write(root.resolve("SmartSPIM/Ex_445_Em_469/440000/440000_460000"),
+      NZ, NY, NX)(voxel)
   }
 
   test("stack → OME-Zarr pyramid is voxel-exact at every level") {
@@ -92,20 +82,9 @@ class PipelineE2ESpec extends AnyFunSuite {
 
   test("pooled multi-stack conversion matches per-stack conversion byte-for-byte") {
     def writeStack(root: java.nio.file.Path, channel: String, col: String,
-        row: String, seed: Int): java.nio.file.Path = {
-      val stack = root.resolve(s"SmartSPIM/$channel/$col/${col}_$row")
-      Files.createDirectories(stack)
-      for (z <- 0 until NZ) {
-        val px = new Array[Byte](NY * NX * 2)
-        for (y <- 0 until NY; x <- 0 until NX) {
-          val v = (voxel(z, y, x) + seed * 977) % 65536; val i = y * NX + x
-          px(2 * i) = (v & 0xFF).toByte
-          px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-        }
-        Files.write(stack.resolve(f"$z%06d.png"), ImageCodec.encodePng16(NX, NY, px))
-      }
-      stack
-    }
+        row: String, seed: Int): java.nio.file.Path =
+      SyntheticStack.write(root.resolve(s"SmartSPIM/$channel/$col/${col}_$row"),
+        NZ, NY, NX)((z, y, x) => (voxel(z, y, x) + seed * 977) % 65536)
     val root = Files.createTempDirectory("graft-e2e-pooled")
     val stacks = Seq(
       writeStack(root, "Ex_445_Em_469", "440000", "460000", 1),

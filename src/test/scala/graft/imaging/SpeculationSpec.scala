@@ -29,17 +29,8 @@ class SpeculationSpec extends AnyFunSuite {
 
   private lazy val root: Path = {
     val r = Files.createTempDirectory("graft-spec-exec")
-    val stack = r.resolve("SmartSPIM/Ex_561_Em_600/430000/430000_480000")
-    Files.createDirectories(stack)
-    for (z <- 0 until NZ) {
-      val px = new Array[Byte](NY * NX * 2)
-      for (y <- 0 until NY; x <- 0 until NX) {
-        val v = voxel(z, y, x); val i = y * NX + x
-        px(2 * i) = (v & 0xFF).toByte
-        px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-      }
-      Files.write(stack.resolve(f"$z%06d.png"), ImageCodec.encodePng16(NX, NY, px))
-    }
+    SyntheticStack.write(r.resolve("SmartSPIM/Ex_561_Em_600/430000/430000_480000"),
+      NZ, NY, NX)(voxel)
     r
   }
   private def stack = root.resolve("SmartSPIM/Ex_561_Em_600/430000/430000_480000")

@@ -27,17 +27,8 @@ class WriteKillRecoverySpec extends AnyFunSuite {
 
   private lazy val root: Path = {
     val r = Files.createTempDirectory("graft-writekill")
-    val stack = r.resolve("SmartSPIM/Ex_445_Em_469/410000/410000_470000")
-    Files.createDirectories(stack)
-    for (z <- 0 until NZ) {
-      val px = new Array[Byte](NY * NX * 2)
-      for (y <- 0 until NY; x <- 0 until NX) {
-        val v = voxel(z, y, x); val i = y * NX + x
-        px(2 * i) = (v & 0xFF).toByte
-        px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-      }
-      Files.write(stack.resolve(f"$z%06d.png"), ImageCodec.encodePng16(NX, NY, px))
-    }
+    SyntheticStack.write(r.resolve("SmartSPIM/Ex_445_Em_469/410000/410000_470000"),
+      NZ, NY, NX)(voxel)
     r
   }
   private def stack = root.resolve("SmartSPIM/Ex_445_Em_469/410000/410000_470000")

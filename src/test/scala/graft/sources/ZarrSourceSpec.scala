@@ -246,18 +246,10 @@ class ZarrSourceSpec extends AnyFunSuite {
     // blosc) → DSv2 reader (readLevelMeta + chunk scan): the two write
     // paths and one read path must agree end to end.
     val root = Files.createTempDirectory("graft-zarr-cross")
-    val stack = root.resolve("SmartSPIM/Ex_445_Em_469/440000/440000_460000")
-    Files.createDirectories(stack)
     val (nz, ny, nx) = (2, 16, 16)
-    for (z <- 0 until nz) {
-      val px = new Array[Byte](ny * nx * 2)
-      for (i <- 0 until ny * nx) {
-        val v = (z * 4099 + i * 17) % 65536
-        px(2 * i) = (v & 0xFF).toByte; px(2 * i + 1) = ((v >> 8) & 0xFF).toByte
-      }
-      Files.write(stack.resolve(f"$z%06d.png"),
-        graft.imaging.ImageCodec.encodePng16(nx, ny, px))
-    }
+    val stack = graft.imaging.SyntheticStack.write(
+      root.resolve("SmartSPIM/Ex_445_Em_469/440000/440000_460000"), nz, ny, nx)(
+      (z, y, x) => (z * 4099 + (y * nx + x) * 17) % 65536)
     graft.imaging.SmartSpimJob.convertStack(spark, stack,
       graft.core.JobSettings(inputSource = root.toString,
         outputDirectory = root.resolve("out").toString,

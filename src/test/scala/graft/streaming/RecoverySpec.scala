@@ -55,15 +55,13 @@ class RecoverySpec extends AnyFunSuite {
   private lazy val parent = SparkSessionTestWrapper.spark
   private val dataDir = "/root/testdata/sf0.001"
 
-  /** Same per-query child-session isolation the production streaming
-    * queries use (onStreamSession): tiny state-store partitioning and
-    * the nanos-as-long parquet flag, without touching the parent. */
-  private def child(): SparkSession = {
-    val s = parent.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s
-  }
+  /** The production streaming child ([[Streaming.streamSession]], the
+    * session every drained query runs on): tiny state-store
+    * partitioning, the nanos-as-long parquet flag and the parent's
+    * planner rules; with `rocksDb`, the tuned RocksDB store with
+    * changelog checkpointing that transformWithState requires. */
+  private def child(rocksDb: Boolean = false): SparkSession =
+    Streaming.streamSession(parent, rocksDb)
 
   /** events.parquet split into two single-file halves at the time
     * midpoint — a.parquet strictly earlier, mtimes ordered — so the
@@ -102,11 +100,7 @@ class RecoverySpec extends AnyFunSuite {
   private def runWithKill(logic: DataFrame => DataFrame,
       finish: DataFrame => DataFrame,
       rocksdb: Boolean = false): (Seq[Seq[Any]], Long, Long) = {
-    val s = child()
-    // transformWithState (the v2 stateful API) requires the RocksDB
-    // provider — same per-child-session switch qStreamTws uses
-    if (rocksdb) s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val s = child(rocksdb)
     val in = splitInput.toString
     val ck = Files.createTempDirectory("graft-rec-ck").toString
     val out = Files.createTempDirectory("graft-rec-out").toString
