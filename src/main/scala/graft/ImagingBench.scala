@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import graft.core.JobSettings
-import graft.imaging.{SmartSpimJob, SyntheticStack}
+import graft.imaging.{SmartSpimJob, SyntheticStack, ZarrStore}
 
 /** Imaging throughput bench (round-10 verdict item 6): end-to-end MB/s
   * of the REAL conversion path — PNG decode from disk → rechunk
@@ -22,7 +22,10 @@ import graft.imaging.{SmartSpimJob, SyntheticStack}
   *
   * Usage: runMain graft.ImagingBench [nSlices] [height] [width]
   * Prints one JSON line: raw bytes, fixture-gen, convert seconds,
-  * MB/s (raw voxel bytes ÷ convert wall time).
+  * MB/s (raw voxel bytes ÷ convert wall time); then one line per format
+  * and pyramid level with what the level's writers counted in the last
+  * pass (chunks, stored bytes, encode and put seconds summed over
+  * tasks).
   */
 object ImagingBench {
   def main(args: Array[String]): Unit = {
@@ -62,9 +65,10 @@ object ImagingBench {
 
     // alternating v2/v3 passes, min per mode — interleaving cancels
     // the JIT-warmup bias a fixed order bakes into whichever runs first
+    val reports = scala.collection.mutable.Map.empty[String, Seq[ZarrStore.LevelWrites]]
     def convert(out: String, fmt: Int, grid: Option[Seq[Int]]): Double = {
       val t = System.nanoTime()
-      SmartSpimJob.convertStack(spark, stack,
+      reports(if (grid.isDefined) "v3_sharded" else s"v$fmt") = SmartSpimJob.convertStack(spark, stack,
         JobSettings(inputSource = root.toString, outputDirectory = out,
           chunkSize = Seq(128, 128, 128), downsampleLevels = 4,
           zarrFormat = fmt, shardGrid = grid),
@@ -99,6 +103,8 @@ object ImagingBench {
     val mbps3 = rawBytes / 1e6 / convSec3
 
     println(f"""{"metric":"imaging_mbps","value":$mbps%.1f,"unit":"MB/s","agg":"min-of-$passes","raw_bytes":$rawBytes,"out_bytes":$outBytes,"out_objects":$outObjects,"gen_sec":$genSec%.1f,"convert_sec":$convSec%.1f,"v3_sharded":{"mbps":$mbps3%.1f,"convert_sec":$convSec3%.1f,"out_bytes":$outBytes3,"out_objects":$outObjects3,"shard":"2,2,2"},"slices":$nz,"h":$ny,"w":$nx,"chunk":"128,128,128","levels":4,"codec":"blosc-zstd-3-shuffle"}""")
+    for ((store, levels) <- reports.toSeq.sortBy(_._1); l <- levels)
+      println(f"""{"report":"$store","level":${l.level},"chunks":${l.chunks},"bytes":${l.bytes},"encode_s":${l.encodeNs / 1e9}%.2f,"put_s":${l.putNs / 1e9}%.2f}""")
 
     del(root)
     spark.stop()

@@ -82,27 +82,32 @@ object SmartSpimJob {
     s"$outputDirectory/$channelName/$stackName.ome.zarr"
   }
 
-  /** Convert one stack directory to `<out>/<channel>/<stack>.ome.zarr`. */
+  /** Convert one stack directory to `<out>/<channel>/<stack>.ome.zarr`;
+    * returns the per-level write report of [[convertStacks]]. */
   def convertStack(spark: SparkSession, stack: Path, settings: JobSettings,
-      voxelZyx: Seq[Double]): Unit =
+      voxelZyx: Seq[Double]): Seq[ZarrStore.LevelWrites] =
     convertStacks(spark, Seq(stack), settings, voxelZyx)
 
   /** Pooled conversion: every stack in the shard flows through ONE
-    * pipeline — one scan, one rechunk shuffle and one write job per
-    * pyramid level, keyed by stack. A driver loop of per-stack jobs
-    * would serialize scheduling at 10k stacks; this shape keeps a
-    * large cluster busy end-to-end. Per-stack metadata stays on the
-    * driver (tiny JSON).
-    */
+    * pipeline — one scan, one rechunk shuffle and one shuffle per
+    * pyramid level, keyed by stack, and one action at the end. A driver
+    * loop of per-stack jobs would serialize scheduling at 10k stacks;
+    * this shape keeps a large cluster busy end-to-end. Per-stack
+    * metadata stays on the driver (tiny JSON).
+    *
+    * Returns what the writers counted per level, summed over every
+    * stack; nothing is written into the output tree for it. */
   def convertStacks(spark: SparkSession, stacks: Seq[Path], settings: JobSettings,
-      voxelZyx: Seq[Double]): Unit = {
-    if (stacks.isEmpty) return
+      voxelZyx: Seq[Double]): Seq[ZarrStore.LevelWrites] = {
+    if (stacks.isEmpty) return Seq.empty
     val compressed = settings.compressorName == "blosc"
     val chunk = settings.chunkSize
     val outDir = settings.outputDirectory
+    val levels = settings.downsampleLevels
     val layout = ZarrStore.Layout(settings.zarrFormat, chunk, settings.shardGrid,
       settings.compressorLevel, settings.byteShuffle, compressed,
       settings.compressorCname)
+    val stats = (0 until levels).map(ZarrStore.WriteStats(spark.sparkContext, _))
 
     // per-stack validation + full-res shape probe (reference S4: pims
     // metadata read of the first file; F2 extension check)
@@ -127,51 +132,30 @@ object SmartSpimJob {
       // probed shapes give the exact shard count per level, which sizes
       // that shuffle (round-12 — see colocatedParts)
       val shardKey = settings.shardGrid
-      def shardsOf(shape: Seq[Int], grid: Seq[Int]): Long =
-        shape.lazyZip(chunk).lazyZip(grid).map { (s, c, g) =>
-          (((s + c - 1) / c + g - 1) / g).toLong }.product
-      def partsFor(shapeMap: Map[String, Seq[Int]]): Option[Int] =
-        shardKey.map(g => SmartSpimPipeline.colocatedParts(
-          spark, shapeMap.values.map(shardsOf(_, g)).sum))
-      var shapes: Map[String, Seq[Int]] =
-        group.map(i => i.dir.toString -> i.shape0).toMap
+      def partsFor(shapeMap: Map[String, Seq[Int]]): Option[Int] = shardKey.map(g =>
+        SmartSpimPipeline.colocatedParts(spark, shapeMap.values.map(_.lazyZip(chunk)
+          .lazyZip(g).map((s, c, n) => (((s + c - 1) / c + n - 1) / n).toLong).product).sum))
+      val shapes = Iterator.iterate(group.map(i => i.dir.toString -> i.shape0).toMap)(
+        _.view.mapValues(_.zip(settings.scaleFactor)
+          .map { case (s, f) => (s + f - 1) / f }).toMap).take(levels).toSeq
+      val store: String => String = storeFor(outDir, _)
+      // one lazy chain, no level cached: level L is written by the map
+      // side of level L+1's shuffle; the last level's write is the action
       val level0 = SmartSpimPipeline.rechunk(
         SmartSpimPipeline.slices(spark, group.map(_.dir.toString), extension), chunk,
-        shardKey, partsFor(shapes))
-      var current = level0
-      // previous level, still persisted: it may only be unpersisted
-      // AFTER the level derived from it has been materialized by an
-      // action, or the derived level's lineage recomputes the whole
-      // pipeline from the source scan once per pyramid level.
-      var prev: Option[org.apache.spark.sql.Dataset[SmartSpimPipeline.ChunkRow]] = None
-      for (level <- 0 until settings.downsampleLevels) {
-        // persist: written level feeds the next one (reference S6
-        // write-then-readback becomes persist-then-downsample)
-        if (level < settings.downsampleLevels - 1)
-          current.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SmartSpimPipeline.writeLevelBy(current, storeFor(outDir, _), level, chunk,
-          settings.compressorLevel, settings.byteShuffle, compressed,
-          settings.compressorCname, settings.zarrFormat, settings.shardGrid,
-          colocated = shardKey.isDefined)
-        // `current` is now materialized in the cache (the write was an
-        // action), so the level it was derived from can be released.
-        prev.foreach(_.unpersist(blocking = false))
-        prev = None
-        shapes.foreach { case (stackDir, shape) =>
-          ZarrStore.writeLevelMeta(storeFor(outDir, stackDir), level,
-            shape.map(_.toLong), layout)
-        }
-        if (level < settings.downsampleLevels - 1) {
-          val nextShapes = shapes.view.mapValues(_.zip(settings.scaleFactor)
-            .map { case (s, f) => (s + f - 1) / f }).toMap
-          val next = SmartSpimPipeline.downsampleLevel(current, chunk,
-            settings.scaleFactor, shardKey, partsFor(nextShapes))
-          prev = Some(current)
-          current = next
-          shapes = nextShapes
-        }
+        shardKey, partsFor(shapes.head))
+      val last = (0 until levels - 1).foldLeft(level0) { (cur, level) =>
+        SmartSpimPipeline.assembleFragments(
+          SmartSpimPipeline.writeAndDownsample(cur, store, level, settings.scaleFactor,
+            layout, Some(stats(level))),
+          shardKey, partsFor(shapes(level + 1)))
       }
-      prev.foreach(_.unpersist(blocking = false))
+      SmartSpimPipeline.writeLevelBy(last, store, levels - 1, chunk,
+        settings.compressorLevel, settings.byteShuffle, compressed,
+        settings.compressorCname, settings.zarrFormat, settings.shardGrid,
+        colocated = shardKey.isDefined, stats = Some(stats(levels - 1)))
+      for ((shapeMap, level) <- shapes.zipWithIndex; (stackDir, shape) <- shapeMap)
+        ZarrStore.writeLevelMeta(store(stackDir), level, shape.map(_.toLong), layout)
     }
 
     // group + OME-NGFF metadata per stack (driver-side, X7)
@@ -210,6 +194,7 @@ object SmartSpimJob {
       }
       ZarrStore.writeGroupMeta(s"$outDir/$channelName", settings.zarrFormat)
     }
+    stats.map(_.value)
   }
 
   /** Derivatives passthrough (S12, smartspim_job.py:197-215): copy

@@ -1,5 +1,6 @@
 package graft.imaging
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -7,19 +8,20 @@ import java.nio.file.{Files, Paths}
 
 /** The SmartSPIM image dataflow, Spark-first (SURVEY.md §3.2):
   *
-  *   binaryFile scan → decode (S2/C2) → fragment explode → groupByKey
-  *   chunk assembly (the rechunk shuffle, P3) → per-chunk windowed-mean
-  *   downsample (A1, shuffle-free) → merge sub-blocks (one shrinking
-  *   shuffle per pyramid level) → blosc/zstd encode + zarr chunk files
-  *   (S7/C1) via foreachPartition.
+  *   binaryFile scan → decode (S2/C2) → fragment explode → chunk
+  *   assembly (the rechunk shuffle, P3) → per level: blosc/zstd encode +
+  *   zarr chunk write (S7/C1) and windowed-mean downsample (A1) in one
+  *   map pass ([[writeAndDownsample]]) → merge sub-blocks (one shrinking
+  *   shuffle per pyramid level) → the last level's write via
+  *   foreachPartition.
   *
-  * Scale design: pixel payloads never pass through a window function or
-  * a driver collect. The only full-data shuffle is the level-0 rechunk
-  * (inherent — the reference's dask `rechunk` does the same,
-  * png_to_zarr.py:592-593); each pyramid level then shuffles 8× less
-  * data. Slice z-indices are parsed from the `<z>.<ext>` filename
-  * whenever a paths-only pass proves that safe, so image bytes stay on
-  * their input partitions until the rechunk — no z-map join at all.
+  * Scale design: pixel payloads never pass through a window function, a
+  * driver collect or a cache; the pyramid is one lazy chain with one
+  * action. The only full-data shuffle is the level-0 rechunk (inherent
+  * — the reference's dask `rechunk` does the same, png_to_zarr.py:
+  * 592-593); each pyramid level then shuffles 8× less data. Slice
+  * z-indices are parsed from the `<z>.<ext>` filename whenever the
+  * scan's file listing proves that safe — no z-map join at all.
   */
 object SmartSpimPipeline {
 
@@ -48,10 +50,11 @@ object SmartSpimPipeline {
     * path within its stack (glob-alphabetical Z order, readers.py:145).
     *
     * Fast path: the reference layout names slices `<z>.<ext>` with
-    * zero-padded z (so alphabetical order IS numeric order). When a
-    * cheap paths-only pass proves every stack's filenames are numeric,
-    * fixed-width and contiguous from 0, z is parsed straight from the
-    * filename — zero shuffles, zero joins, zero broadcasts on the image
+    * zero-padded z (so alphabetical order IS numeric order). When the
+    * scan's own file listing, already held on the driver, shows every
+    * stack's filenames numeric, fixed-width and contiguous from 0
+    * ([[filenameIsZ]]), z is parsed straight from the filename — no
+    * Spark job, zero shuffles, zero joins, zero broadcasts on the image
     * bytes, at any scale. Otherwise fall back to a per-stack window
     * rank joined back on path (a plain equi-join; no broadcast — at
     * ~12.5M slices per 100 TB a broadcast z-map would be multi-GB).
@@ -61,49 +64,25 @@ object SmartSpimPipeline {
 
   /** Multi-stack variant: one scan over every stack dir in the shard,
     * so the whole shard becomes ONE pipeline (one rechunk shuffle, one
-    * write job per level) instead of a driver loop of per-stack jobs —
+    * map stage per level) instead of a driver loop of per-stack jobs —
     * the shape that keeps 1000 executors busy on 10k stacks. */
   def slices(spark: SparkSession, dirs: Seq[String], ext: String): Dataset[SliceRow] = {
     import spark.implicits._
     val files = spark.read.format("binaryFile")
       .option("pathGlobFilter", s"*.$ext")
       .load(dirs: _*)
-    // stack dir = parent of the slice file
-    val stackOf = regexp_replace(col("path"), "/[^/]+$", "")
-    val stemOf = regexp_extract(col("path"), "/(\\d+)\\.[^./]+$", 1)
-    // paths-only validation (binaryFile prunes `content`: this reads
-    // the listing, not the bytes): per stack, filenames must be all
-    // numeric, one width (alphabetical == numeric), distinct, 0..n-1.
-    val chk = files
-      .select(stackOf.as("stack_dir"), stemOf.as("zs"))
-      .groupBy("stack_dir")
-      .agg(count(lit(1)).as("n"),
-        sum(when(col("zs") === "", 1).otherwise(0)).as("non_numeric"),
-        min(when(col("zs") =!= "", col("zs").cast("long"))).as("zmin"),
-        max(when(col("zs") =!= "", col("zs").cast("long"))).as("zmax"),
-        countDistinct(when(col("zs") =!= "", col("zs").cast("long"))).as("nd"),
-        // single-width check via min/max, not a second countDistinct
-        // (each distinct agg multiplies the pre-shuffle rows)
-        min(when(col("zs") =!= "", length(col("zs")))).as("wmin"),
-        max(when(col("zs") =!= "", length(col("zs")))).as("wmax"))
-      .collect() // one tiny row per stack
-    val filenameIsZ = chk.nonEmpty && chk.forall { r =>
-      r.getAs[Long]("non_numeric") == 0L &&
-        r.getAs[Int]("wmin") == r.getAs[Int]("wmax") &&
-        r.getAs[Long]("zmin") == 0L &&
-        r.getAs[Long]("zmax") == r.getAs[Long]("n") - 1 &&
-        r.getAs[Long]("nd") == r.getAs[Long]("n")
-    }
     val indexed =
-      if (filenameIsZ)
-        files.select(col("path"), stemOf.cast("int").as("z"), col("content"))
+      if (filenameIsZ(files.inputFiles.toSeq))
+        files.select(col("path"), regexp_extract(col("path"), Stem, 1).cast("int").as("z"),
+          col("content"))
       else {
         // ranking is per stack so the window shuffle stays partitioned
         // even when many stacks share one glob; join back on path with
         // NO broadcast hint (the z-map grows with the input).
         val zmap = spark.read.format("binaryFile")
           .option("pathGlobFilter", s"*.$ext").load(dirs: _*)
-          .select(col("path"), stackOf.as("stack_dir"))
+          .select(col("path"),
+            regexp_replace(col("path"), "/[^/]+$", "").as("stack_dir"))
           .withColumn("z", row_number().over(
             Window.partitionBy("stack_dir").orderBy("path")) - 1)
           .drop("stack_dir")
@@ -121,6 +100,23 @@ object SmartSpimPipeline {
         }
         SliceRow(stack, z, dec.height, dec.width, dec.data)
       }
+  }
+
+  /** A slice file's numeric stem: the `<z>` of `.../<z>.<ext>`. */
+  private val Stem = "/(\\d+)\\.[^./]+$"
+
+  /** Whether z can be read from the filename: per stack dir, every
+    * slice is named by its numeric [[Stem]], all stems have one width
+    * (so alphabetical order is numeric order) and they are exactly
+    * 0..n-1. `paths` is the scan's file listing. */
+  private[imaging] def filenameIsZ(paths: Seq[String]): Boolean = {
+    val stem = Stem.r
+    paths.nonEmpty && paths.groupBy(p => p.substring(0, p.lastIndexOf('/'))).values.forall {
+      files =>
+        val zs = files.flatMap(p => stem.findFirstMatchIn(p).map(_.group(1)))
+        zs.size == files.size && zs.map(_.length).distinct.size == 1 &&
+          zs.flatMap(_.toLongOption).sorted == (0L until files.size)
+    }
   }
 
   // ------------------------------------------------- rechunk (P3 shuffle)
@@ -184,6 +180,18 @@ object SmartSpimPipeline {
     ChunkRow(stack, zc, yc, xc, dz, dy, dx, out)
   }
 
+  /** Shuffle width for a shard-keyed assembly with a KNOWN shard
+    * count: 2× the shards (mostly-singleton hash buckets, makespan ≈
+    * total/cores) capped at 4 tasks per core, never below the
+    * session's configured shuffle width — so a real deployment's
+    * bytes-based sizing always wins and only the small-job straggler
+    * regime is widened. */
+  def colocatedParts(spark: SparkSession, shardCount: Long): Int = {
+    val conf = spark.sessionState.conf.numShufflePartitions
+    val cap = 4L * spark.sparkContext.defaultParallelism
+    math.max(conf.toLong, math.min(2L * math.max(shardCount, 1L), cap)).toInt
+  }
+
   /** Group sub-blocks by target chunk and copy them into place.
     *
     * With `shard` set (zarr v3 `sharding_indexed` downstream), the ONE
@@ -207,19 +215,7 @@ object SmartSpimPipeline {
     * max-bucket. At real scale (shards ≫ partitions) the hint is
     * inert: [[colocatedParts]] never drops below the session's
     * configured shuffle width. */
-  /** Shuffle width for a shard-keyed assembly with a KNOWN shard
-    * count: 2× the shards (mostly-singleton hash buckets, makespan ≈
-    * total/cores) capped at 4 tasks per core, never below the
-    * session's configured shuffle width — so a real deployment's
-    * bytes-based sizing always wins and only the small-job straggler
-    * regime is widened. */
-  def colocatedParts(spark: SparkSession, shardCount: Long): Int = {
-    val conf = spark.sessionState.conf.numShufflePartitions
-    val cap = 4L * spark.sparkContext.defaultParallelism
-    math.max(conf.toLong, math.min(2L * math.max(shardCount, 1L), cap)).toInt
-  }
-
-  private def assembleFragments(frags: Dataset[SubBlock],
+  private[imaging] def assembleFragments(frags: Dataset[SubBlock],
       shard: Option[Seq[Int]] = None,
       parts: Option[Int] = None): Dataset[ChunkRow] = {
     val spark = frags.sparkSession
@@ -306,27 +302,51 @@ object SmartSpimPipeline {
     (oz, oy, ox, out)
   }
 
+  /** The pyramid step's geometry, in one place: chunk → its windowed
+    * mean by `factor`, applied `times` times, as the sub-block it
+    * fills in the chunk of the level `times` steps coarser. Requires
+    * the chunk dims to be divisible by factor^times (true for the
+    * reference defaults 128³ / 2³). */
+  private def subBlockOf(chunk: Seq[Int], factor: Seq[Int],
+      times: Int = 1): ChunkRow => SubBlock = {
+    val Seq(cz, cy, cx) = chunk
+    val Seq(fz, fy, fx) = factor.map(f => math.pow(f, times).toInt)
+    require(cz % fz == 0 && cy % fy == 0 && cx % fx == 0,
+      "chunk size must be divisible by the scale factor^levels")
+    c => {
+      val (dz, dy, dx, data) = Iterator.iterate((c.dz, c.dy, c.dx, c.data)) {
+        case (z, y, x, d) => windowedMean(z, y, x, d, factor) }.drop(times).next()
+      SubBlock(c.stack, c.zc / fz, c.yc / fy, c.xc / fx,
+        (c.zc % fz) * (cz / fz), (c.yc % fy) * (cy / fy), (c.xc % fx) * (cx / fx),
+        dz, dy, dx, data)
+    }
+  }
+
   /** One pyramid step: downsample every chunk in place (no shuffle),
     * then merge the s³ sibling sub-blocks into full-size chunks of the
-    * next level (a shuffle over 1/8th the bytes for s=2). Requires the
-    * chunk dims to be divisible by the scale factor (true for the
-    * reference defaults 128³ / 2³). */
+    * next level (a shuffle over 1/8th the bytes for s=2). */
   def downsampleLevel(chunks: Dataset[ChunkRow], chunk: Seq[Int],
       factor: Seq[Int], shard: Option[Seq[Int]] = None,
       parts: Option[Int] = None): Dataset[ChunkRow] = {
     val spark = chunks.sparkSession
     import spark.implicits._
-    val Seq(cz, cy, cx) = chunk
-    val Seq(sz, sy, sx) = factor
-    require(cz % sz == 0 && cy % sy == 0 && cx % sx == 0,
-      "chunk size must be divisible by scale factor")
-    val sub = chunks.map { c =>
-      val (oz, oy, ox, data) = windowedMean(c.dz, c.dy, c.dx, c.data, factor)
-      SubBlock(c.stack, c.zc / sz, c.yc / sy, c.xc / sx,
-        (c.zc % sz) * (cz / sz), (c.yc % sy) * (cy / sy), (c.xc % sx) * (cx / sx),
-        oz, oy, ox, data)
-    }
-    assembleFragments(sub, shard, parts)
+    assembleFragments(chunks.map(subBlockOf(chunk, factor)), shard, parts)
+  }
+
+  /** The conversion's pyramid step: write each chunk of level `level`,
+    * then emit its downsampled sub-block of the next level, in one map
+    * pass. Merged by [[assembleFragments]], the next level is built by
+    * the map side of its own shuffle, so the written level is never
+    * cached or read twice; keys are deterministic and puts atomic, so a
+    * retried or resubmitted task rewrites the same bytes. For a sharded
+    * `layout`, `chunks` must be the shard-keyed assembly. */
+  def writeAndDownsample(chunks: Dataset[ChunkRow], storeOf: String => String,
+      level: Int, factor: Seq[Int], layout: ZarrStore.Layout,
+      stats: Option[ZarrStore.WriteStats] = None): Dataset[SubBlock] = {
+    val spark = chunks.sparkSession
+    import spark.implicits._
+    val down = subBlockOf(layout.chunk, factor)
+    chunks.mapPartitions(it => writing(it, storeOf, level, layout, stats).map(down))
   }
 
   /** Fused multi-level downsample: compute pyramid level `levels`
@@ -343,38 +363,41 @@ object SmartSpimPipeline {
     * 2^k never cross a chunk boundary when 2^k divides the chunk dim
     * (edge chunks clamp at the array edge, which is their own edge).
     *
-    * At scale this replaces k shuffles + k intermediate level
-    * materializations (the reference's write-then-readback per level,
-    * png_to_zarr.py:673-675) with ZERO intermediate state and ONE
-    * shuffle over 8^-k of the input bytes — the path to use when only
-    * a coarse level is consumed (thumbnailing, registration preview,
-    * QC stats), while the per-level loop remains the path that writes
-    * every level. */
+    * At scale this replaces k shuffles with ONE shuffle over 8^-k of
+    * the input bytes — the path to use when only a coarse level is
+    * consumed (thumbnailing, registration preview, QC stats), while
+    * [[writeAndDownsample]] remains the path that writes every level. */
   def downsampleToLevel(chunks: Dataset[ChunkRow], chunk: Seq[Int],
       factor: Seq[Int], levels: Int): Dataset[ChunkRow] = {
     require(levels >= 1, "levels must be >= 1")
     val spark = chunks.sparkSession
     import spark.implicits._
-    val Seq(cz, cy, cx) = chunk
-    val Seq(fz, fy, fx) = factor.map(f => math.pow(f, levels).toInt)
-    require(cz % fz == 0 && cy % fy == 0 && cx % fx == 0,
-      "chunk size must be divisible by factor^levels")
-    val sub = chunks.map { c =>
-      var dz = c.dz; var dy = c.dy; var dx = c.dx; var data = c.data
-      var i = 0
-      while (i < levels) {
-        val r = windowedMean(dz, dy, dx, data, factor)
-        dz = r._1; dy = r._2; dx = r._3; data = r._4
-        i += 1
-      }
-      SubBlock(c.stack, c.zc / fz, c.yc / fy, c.xc / fx,
-        (c.zc % fz) * (cz / fz), (c.yc % fy) * (cy / fy), (c.xc % fx) * (cx / fx),
-        dz, dy, dx, data)
-    }
-    assembleFragments(sub)
+    assembleFragments(chunks.map(subBlockOf(chunk, factor, levels)))
   }
 
   // ------------------------------------------------------- zarr sink (S7)
+
+  /** One task's `chunks`, each written as it passes through one
+    * [[ZarrStore.ChunkWriter]]: the open shard is committed when the
+    * input is exhausted, and aborted by the task's completion listener
+    * otherwise (a no-op after the commit). */
+  private def writing(chunks: Iterator[ChunkRow], storeOf: String => String, level: Int,
+      layout: ZarrStore.Layout, stats: Option[ZarrStore.WriteStats]): Iterator[ChunkRow] = {
+    val w = new ZarrStore.ChunkWriter(layout, stats)
+    TaskContext.get().addTaskCompletionListener[Unit](_ => w.abort())
+    var open = true
+    new Iterator[ChunkRow] {
+      override def hasNext: Boolean = chunks.hasNext || {
+        if (open) { w.finish(); open = false }
+        false
+      }
+      override def next(): ChunkRow = {
+        val c = chunks.next()
+        w.write(storeOf(c.stack), level, c.zc, c.yc, c.xc, c.dz, c.dy, c.dx, c.data)
+        c
+      }
+    }
+  }
 
   /** Write one level's chunks as zarr v2 chunk objects of one store
     * (key layout, padding, codec and atomic put: [[ZarrStore]]). */
@@ -392,7 +415,8 @@ object SmartSpimPipeline {
     * `format` 2 (default) writes the reference's v2 layout, 3 the v3
     * default key encoding; `shard` (chunks-per-shard Z,Y,X; v3 only)
     * writes `sharding_indexed` shard objects instead of chunk objects.
-    * Every object goes through one [[ZarrStore.ChunkWriter]] per task.
+    * Every object goes through one [[ZarrStore.ChunkWriter]] per task,
+    * which counts into `stats` when given.
     *
     * With `colocated=true` (round-11: the single-shuffle sharded
     * write), `chunks` MUST come from a shard-keyed assembly
@@ -407,7 +431,7 @@ object SmartSpimPipeline {
       level: Int, chunk: Seq[Int], clevel: Int, byteShuffle: Boolean,
       compressed: Boolean, cname: String = "zstd",
       format: Int = 2, shard: Option[Seq[Int]] = None,
-      colocated: Boolean = false): Unit = {
+      colocated: Boolean = false, stats: Option[ZarrStore.WriteStats] = None): Unit = {
     val layout = ZarrStore.Layout(format, chunk, shard, clevel, byteShuffle,
       compressed, cname)
     val rows = layout.grid match {
@@ -422,12 +446,7 @@ object SmartSpimPipeline {
       case _ => chunks
     }
     rows.foreachPartition { (it: Iterator[ChunkRow]) =>
-      val w = new ZarrStore.ChunkWriter(layout)
-      try {
-        it.foreach(c => w.write(storeOf(c.stack), level, c.zc, c.yc, c.xc,
-          c.dz, c.dy, c.dx, c.data))
-        w.finish(); ()
-      } finally w.abort()
+      writing(it, storeOf, level, layout, stats).foreach(_ => ())
     }
   }
 

@@ -4,6 +4,8 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path => HPath}
+import org.apache.spark.SparkContext
+import org.apache.spark.util.LongAccumulator
 import org.json4s.JObject
 
 /** The zarr store format in one place (reference: create_dataset +
@@ -196,13 +198,35 @@ object ZarrStore {
 
   // ------------------------------------------------------- chunk writer
 
+  /** One level's writes, summed over the tasks that wrote it: chunks
+    * stored, bytes stored (payloads plus shard index footers, i.e. the
+    * bytes of the level's objects) and the time spent encoding chunks
+    * and putting objects. */
+  final case class LevelWrites(level: Int, chunks: Long, bytes: Long, encodeNs: Long,
+      putNs: Long)
+
+  /** Task-side counters behind one [[LevelWrites]]. Only successful task
+    * attempts add to them; a stage that is re-run counts twice. */
+  final case class WriteStats(level: Int, chunks: LongAccumulator, bytes: LongAccumulator,
+      encodeNs: LongAccumulator, putNs: LongAccumulator) {
+    def value: LevelWrites =
+      LevelWrites(level, chunks.value, bytes.value, encodeNs.value, putNs.value)
+  }
+
+  object WriteStats {
+    def apply(sc: SparkContext, level: Int): WriteStats = {
+      def acc(name: String) = sc.longAccumulator(s"zarr.L$level.$name")
+      WriteStats(level, acc("chunks"), acc("bytes"), acc("encode_ns"), acc("put_ns"))
+    }
+  }
+
   /** One task's writer of a level's chunks: each chunk is encoded and
     * stored as it arrives, as its own object or, for a sharded level,
     * through one [[ShardWriter]]. Holds one Hadoop Configuration and
-    * the FileSystem of the store last written. Call [[finish]] after
-    * the last chunk, and [[abort]] in a `finally` (a no-op after
-    * finish). */
-  final class ChunkWriter(layout: Layout) {
+    * the FileSystem of the store last written; counts into `stats` when
+    * given. Call [[finish]] once after the last chunk, and [[abort]]
+    * when the task ends (a no-op after finish). */
+  final class ChunkWriter(layout: Layout, stats: Option[WriteStats] = None) {
     private val conf = new Configuration()
     private var root: String = _
     private var fs: FileSystem = _
@@ -215,19 +239,31 @@ object ZarrStore {
 
     def write(store: String, level: Int, zc: Int, yc: Int, xc: Int,
         dz: Int, dy: Int, dx: Int, data: Array[Byte]): Unit = {
+      val t0 = System.nanoTime()
       val payload = layout.encode(dz, dy, dx, data)
+      val t1 = System.nanoTime()
       sharded match {
         case Some((g, w)) => w.write(fsOf(store), store, shardKey(g, level, zc, yc, xc),
           slot(g, zc, yc, xc), payload)
         case None =>
           put(fsOf(store), store, chunkKey(layout.format, level, zc, yc, xc), payload)
       }
+      stats.foreach { s =>
+        s.chunks.add(1); s.bytes.add(payload.length)
+        s.encodeNs.add(t1 - t0); s.putNs.add(System.nanoTime() - t1)
+      }
     }
 
     /** Commit the open shard; the shard objects written, as
       * `<store>/<key>` (empty for an unsharded level). */
-    def finish(): Seq[String] =
-      sharded.fold(Seq.empty[String]) { case (_, w) => w.finish(); w.written }
+    def finish(): Seq[String] = sharded.fold(Seq.empty[String]) { case (g, w) =>
+      val t0 = System.nanoTime()
+      w.finish()
+      stats.foreach { s => // each shard ends in a 16-byte-per-slot index and its crc32c
+        s.bytes.add(w.written.size * (16L * g.product + 4)); s.putNs.add(System.nanoTime() - t0)
+      }
+      w.written
+    }
 
     def abort(): Unit = sharded.foreach(_._2.abort())
   }

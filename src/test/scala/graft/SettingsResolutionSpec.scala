@@ -36,7 +36,8 @@ class SettingsResolutionSpec extends AnyFunSuite {
   test("--config-file path is read and parsed") {
     val f = Files.createTempFile("graft-settings", ".json")
     Files.writeString(f, json)
-    val s = SmartSpimMain.settingsFrom(Array("--config-file", f.toString), Map.empty)
+    val s = try SmartSpimMain.settingsFrom(Array("--config-file", f.toString), Map.empty)
+      finally Files.delete(f)
     assert(s.outputDirectory == "/out" && s.numOfPartitions == 4)
   }
 

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * must still complete with exactly the rows the local oracle-gated
   * run produces: reliable-checkpoint recovery proven, not asserted.
   */
-class WorkerKillRecoverySpec extends AnyFunSuite {
+class WorkerKillRecoverySpec extends AnyFunSuite with TempDirs {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("kcore survives an executor kill mid-loop under a reliable checkpoint dir") {
@@ -27,7 +27,7 @@ class WorkerKillRecoverySpec extends AnyFunSuite {
       .toSeq
     assert(expected.nonEmpty)
 
-    val ckpt = Files.createTempDirectory("graft-kcore-ckpt")
+    val ckpt = tempDir("graft-kcore-ckpt")
     val (code, text) = org.apache.spark.deploy.MiniClusterProbe.runProbe(
       "org.apache.spark.deploy.KcoreRecoveryProbe", "2g", sfDir, ckpt.toString)
     assert(code == 0, s"probe failed:\n${text.takeRight(4000)}")

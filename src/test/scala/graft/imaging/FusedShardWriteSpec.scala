@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 
 /** Single-shuffle v3 sharded write (round-11 verdict item 2): keying
   * the rechunk shuffle by the SHARD grid (a pure function of the chunk
@@ -15,7 +15,7 @@ import graft.SparkSessionTestWrapper
   * per-partition — same bytes as the shard-keyed second shuffle, one
   * exchange fewer.
   */
-class FusedShardWriteSpec extends AnyFunSuite {
+class FusedShardWriteSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
 
   // non-divisible dims: Z=5, Y=70, X=96 with 32³ chunks → 1×3×3 grid;
@@ -27,7 +27,7 @@ class FusedShardWriteSpec extends AnyFunSuite {
   private def voxel(z: Int, y: Int, x: Int): Int = (z * 9973 + y * 131 + x) % 65536
 
   private lazy val stack: Path = {
-    val root = Files.createTempDirectory("graft-fused-shard")
+    val root = tempDir("graft-fused-shard")
     SyntheticStack.write(root.resolve("SmartSPIM/Ex_488_Em_525/420000/420000_470000"),
       NZ, NY, NX)(voxel)
   }
@@ -65,7 +65,7 @@ class FusedShardWriteSpec extends AnyFunSuite {
       .sortBy(t => (t._1, t._2, t._3))
 
   test("fused colocated write is voxel-identical to the shard-keyed shuffle write") {
-    val root = Files.createTempDirectory("graft-fused-cmp")
+    val root = tempDir("graft-fused-cmp")
     val (a, b) = (root.resolve("fused"), root.resolve("twoshuffle"))
     writeFused(a.toString)
     writeTwoShuffle(b.toString)
@@ -86,11 +86,10 @@ class FusedShardWriteSpec extends AnyFunSuite {
   }
 
   test("fused write executes one fewer stage than the shard-keyed shuffle path") {
-    // pre-build both lineages so the slices() stem-probe jobs run
-    // outside the counted window
+    // pre-build both lineages outside the counted window
     val fusedChunks = SmartSpimPipeline.rechunk(slices, CHUNK, Some(GRID))
     val plainChunks = SmartSpimPipeline.rechunk(slices, CHUNK)
-    val root = Files.createTempDirectory("graft-fused-stages")
+    val root = tempDir("graft-fused-stages")
     val fStore = root.resolve("f").toString
     val pStore = root.resolve("p").toString
     def countStages(body: => Unit): Int = {

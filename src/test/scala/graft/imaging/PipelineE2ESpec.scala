@@ -1,15 +1,15 @@
 package graft.imaging
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
-import graft.SparkSessionTestWrapper
-import graft.core.JobSettings
+import java.nio.file.{Files, Path, Paths}
+import graft.{SparkSessionTestWrapper, TempDirs}
+import graft.core.{JobRecorder, JobSettings}
 
 /** End-to-end conversion of a synthesized SmartSPIM fixture
   * (reference tests/test_integration.py layout, but with golden-output
   * voxel comparison, which the reference lacks — SURVEY.md §5).
   */
-class PipelineE2ESpec extends AnyFunSuite {
+class PipelineE2ESpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
 
   // deliberately non-divisible dims: Z=5, Y=70, X=96 with 32³ chunks
@@ -42,7 +42,7 @@ class PipelineE2ESpec extends AnyFunSuite {
   }
 
   test("stack → OME-Zarr pyramid is voxel-exact at every level") {
-    val root = Files.createTempDirectory("graft-e2e")
+    val root = tempDir("graft-e2e")
     val stack = writeFixture(root)
     val out = root.resolve("out")
     val settings = JobSettings(
@@ -85,7 +85,7 @@ class PipelineE2ESpec extends AnyFunSuite {
         row: String, seed: Int): java.nio.file.Path =
       SyntheticStack.write(root.resolve(s"SmartSPIM/$channel/$col/${col}_$row"),
         NZ, NY, NX)((z, y, x) => (voxel(z, y, x) + seed * 977) % 65536)
-    val root = Files.createTempDirectory("graft-e2e-pooled")
+    val root = tempDir("graft-e2e-pooled")
     val stacks = Seq(
       writeStack(root, "Ex_445_Em_469", "440000", "460000", 1),
       writeStack(root, "Ex_445_Em_469", "440000", "480000", 2),
@@ -113,7 +113,7 @@ class PipelineE2ESpec extends AnyFunSuite {
 
   test("wave-bounded write produces the same store as the single-job write") {
     import graft.SparkSessionTestWrapper.spark.implicits._
-    val root = Files.createTempDirectory("graft-e2e-waves")
+    val root = tempDir("graft-e2e-waves")
     val stack = writeFixture(root)
     val chunks = SmartSpimPipeline.rechunk(
       SmartSpimPipeline.slices(spark, stack.toString, "png"), CHUNK)
@@ -140,7 +140,7 @@ class PipelineE2ESpec extends AnyFunSuite {
   }
 
   test("slices: numeric zero-padded names use the filename-z fast path (no join)") {
-    val root = Files.createTempDirectory("graft-zfast")
+    val root = tempDir("graft-zfast")
     val stack = writeFixture(root) // %06d.png names, 0-based contiguous
     val ds = SmartSpimPipeline.slices(spark, stack.toString, "png")
     // plan must contain no join at all: z comes from the filename
@@ -155,7 +155,7 @@ class PipelineE2ESpec extends AnyFunSuite {
     // mixed widths: "0.png".."10.png" — alphabetical order is
     // 0,1,10,2,..,9, which IS the reference's glob order; numeric parse
     // would disagree, so the checker must reject the fast path.
-    val root = Files.createTempDirectory("graft-zslow")
+    val root = tempDir("graft-zslow")
     val stack = root.resolve("s")
     Files.createDirectories(stack)
     val n = 11
@@ -171,8 +171,61 @@ class PipelineE2ESpec extends AnyFunSuite {
     assert(byZ == expected, "fallback z must be the alphabetical rank")
   }
 
+  test("slices: a gap, a stack starting at 1 or one non-conforming stack fall back to rank") {
+    // each slice marks its alphabetical rank within its stack in voxel 0
+    def stack(dir: Path, stems: Seq[String]): Path = {
+      Files.createDirectories(dir)
+      for ((stem, rank) <- stems.sorted.zipWithIndex) {
+        val px = new Array[Byte](4 * 4 * 2)
+        px(0) = rank.toByte
+        Files.write(dir.resolve(s"$stem.png"), ImageCodec.encodePng16(4, 4, px))
+      }
+      dir
+    }
+    val root = tempDir("graft-zrank")
+    val cases = Seq(
+      "gap" -> Seq(stack(root.resolve("gap/s"), Seq("0", "1", "3"))),
+      "from 1" -> Seq(stack(root.resolve("from1/s"), Seq("001", "002", "003"))),
+      "one of two" -> Seq(stack(root.resolve("two/ok"), Seq("0", "1", "2")),
+        stack(root.resolve("two/bad"), Seq("0", "2", "4"))))
+    for ((name, dirs) <- cases) {
+      val rows = SmartSpimPipeline.slices(spark, dirs.map(_.toString), "png").collect()
+      assert(rows.length == dirs.size * 3, name)
+      rows.foreach(r => assert(r.z == r.data(0), s"$name: z must be the alphabetical rank"))
+    }
+  }
+
+  test("slices: files outside the extension glob do not defeat the filename-z fast path") {
+    val root = tempDir("graft-zglob")
+    val stack = writeFixture(root)
+    Files.writeString(stack.resolve("notes.txt"), "not a slice")
+    val ds = SmartSpimPipeline.slices(spark, stack.toString, "png")
+    val p = ds.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    assert(!p.contains("Join"), "a non-png file must not force the rank join")
+    assert(ds.collect().map(_.z).sorted.toSeq == (0 until NZ))
+  }
+
+  test("conversion job shape: at most levels + 1 Spark jobs and no level cached") {
+    val root = tempDir("graft-e2e-shape")
+    val stack = writeFixture(root)
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    // the filename-z check is made where the reader is built: no job
+    // runs there, so none can start before the decode stage
+    val (_, readerJobs) = JobRecorder.during(sc)(
+      SmartSpimPipeline.slices(spark, stack.toString, "png"))
+    assert(readerJobs.isEmpty, s"building the reader ran jobs: $readerJobs")
+    val levels = 3
+    val (_, jobs) = JobRecorder.during(sc)(SmartSpimJob.convertStack(spark, stack,
+      JobSettings(inputSource = root.toString, outputDirectory = root.resolve("out").toString,
+        chunkSize = CHUNK, downsampleLevels = levels), Seq(2.0, 1.8, 1.8)))
+    assert(jobs.size <= levels + 1, s"${jobs.size} jobs: $jobs")
+    assert(spark.sharedState.cacheManager.isEmpty, "a level was left in the cache")
+    assert(sc.getPersistentRDDs.keySet == persisted, "a level RDD was left persisted")
+  }
+
   test("TIFF stack converts end-to-end voxel-exact (F2/S2 tif path)") {
-    val root = Files.createTempDirectory("graft-e2e-tiff")
+    val root = tempDir("graft-e2e-tiff")
     val stack = root.resolve("SmartSPIM/Ex_445_Em_469/440000/440000_460000")
     Files.createDirectories(stack)
     val (nz, ny, nx) = (3, 40, 48)
@@ -197,7 +250,7 @@ class PipelineE2ESpec extends AnyFunSuite {
   }
 
   test("uncompressed store (compressor none) also round-trips") {
-    val root = Files.createTempDirectory("graft-e2e-raw")
+    val root = tempDir("graft-e2e-raw")
     val stack = writeFixture(root)
     val out = root.resolve("out")
     val settings = JobSettings(

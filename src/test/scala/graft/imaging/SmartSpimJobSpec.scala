@@ -2,12 +2,12 @@ package graft.imaging
 
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 import graft.core.JobSettings
 
 /** Job-level semantics (reference tests/test_smartspim_job.py):
   * discovery order, sharding, voxel-resolution parse, error paths. */
-class SmartSpimJobSpec extends AnyFunSuite {
+class SmartSpimJobSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
 
   private val acquisitionJson =
@@ -24,7 +24,7 @@ class SmartSpimJobSpec extends AnyFunSuite {
       |}""".stripMargin
 
   private def mkFixture(channels: Seq[String], stacksPerChannel: Int): Path = {
-    val root = Files.createTempDirectory("graft-job")
+    val root = tempDir("graft-job")
     Files.writeString(root.resolve("acquisition.json"), acquisitionJson)
     Files.createDirectories(root.resolve("derivatives"))
     Files.writeString(root.resolve("derivatives/metadata.json"), """{"session": 1}""")
@@ -55,13 +55,13 @@ class SmartSpimJobSpec extends AnyFunSuite {
 
   test("voxelResolution: missing file raises (smartspim_job.py:67-71)") {
     intercept[java.io.FileNotFoundException] {
-      SmartSpimJob.voxelResolution(Files.createTempDirectory("x").resolve("nope.json"))
+      SmartSpimJob.voxelResolution(tempDir("x").resolve("nope.json"))
     }
   }
 
   test("readJsonAsMap tolerates missing files (io/utils.py:111-135)") {
     assert(ZarrMeta.readJsonAsMap(
-      Files.createTempDirectory("x").resolve("nope.json")).isEmpty)
+      tempDir("x").resolve("nope.json")).isEmpty)
   }
 
   test("emissionWavelength / wavelengthToHex parity with the reference table") {
@@ -150,6 +150,35 @@ class SmartSpimJobSpec extends AnyFunSuite {
     }
   }
 
+  test("per-level write report: stored bytes equal the chunk and shard objects on disk") {
+    val root = mkFixture(Seq("Ex_445_Em_469"), 1)
+    val stack = SmartSpimJob.discoverStacks(root.toString).head
+    import scala.jdk.CollectionConverters._
+    for ((fmt, grid) <- Seq(2 -> None, 3 -> Some(Seq(2, 2, 2)))) {
+      val out = root.resolve(s"report-v$fmt")
+      val report = SmartSpimJob.convertStack(spark, stack, JobSettings(
+        inputSource = root.toString, outputDirectory = out.toString,
+        chunkSize = Seq(4, 4, 4), downsampleLevels = 3, zarrFormat = fmt, shardGrid = grid),
+        Seq(2.0, 1.8, 1.8))
+      val store = out.resolve("Ex_445_Em_469/440000_460000.ome.zarr")
+      assert(report.map(_.level) == Seq(0, 1, 2))
+      report.foreach { l =>
+        // chunk or shard objects only: no level metadata, no local-FS .crc sidecars
+        val objects = Files.walk(store.resolve(l.level.toString)).iterator().asScala
+          .filter(p => Files.isRegularFile(p) && !p.getFileName.toString.startsWith(".") &&
+            p.getFileName.toString != "zarr.json").toSeq
+        assert(objects.nonEmpty)
+        assert(l.bytes == objects.map(Files.size).sum, s"v$fmt level ${l.level}")
+        if (grid.isEmpty) assert(l.chunks == objects.size, s"v$fmt level ${l.level}")
+        assert(l.encodeNs > 0 && l.putNs > 0)
+      }
+    }
+    // level 0 is 1×4×4 chunks of the 2×16×16 stack
+    assert(SmartSpimJob.convertStack(spark, stack, JobSettings(
+      inputSource = root.toString, outputDirectory = root.resolve("report-again").toString,
+      chunkSize = Seq(4, 4, 4), downsampleLevels = 1), Seq(2.0, 1.8, 1.8)).head.chunks == 16)
+  }
+
   test("full job writes through a second FileSystem scheme (s3a:// contract, S9/S10)") {
     // mock:// is RawLocalFileSystem under a foreign scheme
     // (src/test/resources/core-site.xml). Every output path — chunk
@@ -157,7 +186,7 @@ class SmartSpimJobSpec extends AnyFunSuite {
     // route through Hadoop FileSystem, or this job fails the way an
     // s3a:// run would.
     val root = mkFixture(Seq("Ex_445_Em_469"), 1)
-    val outLocal = Files.createTempDirectory("graft-mockfs")
+    val outLocal = tempDir("graft-mockfs")
     val outUri = s"mock://$outLocal/out"
     val before = graft.testfs.MockFileSystem.created.get()
     SmartSpimJob.runJob(spark, JobSettings(

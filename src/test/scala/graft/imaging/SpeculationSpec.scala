@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 import graft.core.JobSettings
 
 /** Speculative-execution safety (round-11 verdict item 7): the full
@@ -18,7 +18,7 @@ import graft.core.JobSettings
   * chunk and shard writers (`ZarrStore.put` / `ZarrStore.ShardWriter`),
   * which this is the first test to actually drive.
   */
-class SpeculationSpec extends AnyFunSuite {
+class SpeculationSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
 
   // big enough that decode/rechunk/write tasks outlast the speculation
@@ -28,7 +28,7 @@ class SpeculationSpec extends AnyFunSuite {
   private def voxel(z: Int, y: Int, x: Int): Int = (z * 7919 + y * 113 + x) % 65536
 
   private lazy val root: Path = {
-    val r = Files.createTempDirectory("graft-spec-exec")
+    val r = tempDir("graft-spec-exec")
     SyntheticStack.write(r.resolve("SmartSPIM/Ex_561_Em_600/430000/430000_480000"),
       NZ, NY, NX)(voxel)
     r
@@ -50,7 +50,7 @@ class SpeculationSpec extends AnyFunSuite {
 
   test("speculative re-execution leaves the v3 sharded store byte-identical") {
     // reference store: plain in-process run, no speculation
-    val plain = Files.createTempDirectory("graft-spec-plain")
+    val plain = tempDir("graft-spec-plain")
     SmartSpimJob.convertStacks(spark, Seq(stack),
       JobSettings(inputSource = root.toString, outputDirectory = plain.toString,
         chunkSize = Seq(64, 64, 64), downsampleLevels = 3,
@@ -59,7 +59,7 @@ class SpeculationSpec extends AnyFunSuite {
     val expected = digest(plain)
     assert(expected.nonEmpty)
 
-    val specOut = Files.createTempDirectory("graft-spec-spec")
+    val specOut = tempDir("graft-spec-spec")
     val (code, text) = org.apache.spark.deploy.MiniClusterProbe.runProbe(
       "graft.imaging.SpeculationProbe", "2g",
       stack.toString, root.toString, specOut.toString, "3")

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 import graft.core.JobSettings
 
 /** Executor-kill idempotency for the batch zarr write (round-12
@@ -18,7 +18,7 @@ import graft.core.JobSettings
   * tmp+rename retry branches driven by REAL task re-execution, where
   * SpeculationSpec drives them with healthy duplicate clones.
   */
-class WriteKillRecoverySpec extends AnyFunSuite {
+class WriteKillRecoverySpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
 
   private val NZ = 16; private val NY = 1200; private val NX = 1500
@@ -26,7 +26,7 @@ class WriteKillRecoverySpec extends AnyFunSuite {
   private def voxel(z: Int, y: Int, x: Int): Int = (z * 6007 + y * 131 + x) % 65536
 
   private lazy val root: Path = {
-    val r = Files.createTempDirectory("graft-writekill")
+    val r = tempDir("graft-writekill")
     SyntheticStack.write(r.resolve("SmartSPIM/Ex_445_Em_469/410000/410000_470000"),
       NZ, NY, NX)(voxel)
     r
@@ -48,7 +48,7 @@ class WriteKillRecoverySpec extends AnyFunSuite {
       }.toMap
 
   test("executor kill mid shard-write: store byte-identical after task re-execution") {
-    val plain = Files.createTempDirectory("graft-writekill-plain")
+    val plain = tempDir("graft-writekill-plain")
     SmartSpimJob.convertStacks(spark, Seq(stack),
       JobSettings(inputSource = root.toString, outputDirectory = plain.toString,
         chunkSize = Seq(64, 64, 64), downsampleLevels = 3,
@@ -57,7 +57,7 @@ class WriteKillRecoverySpec extends AnyFunSuite {
     val expected = digest(plain)
     assert(expected.nonEmpty)
 
-    val killedOut = Files.createTempDirectory("graft-writekill-out")
+    val killedOut = tempDir("graft-writekill-out")
     val (code, text) = org.apache.spark.deploy.MiniClusterProbe.runProbe(
       "org.apache.spark.deploy.WriteKillProbe", "2g",
       stack.toString, root.toString, killedOut.toString)

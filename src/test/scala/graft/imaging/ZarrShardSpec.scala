@@ -6,12 +6,14 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileSystem
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Binary layout law for v3 `sharding_indexed` shard objects
   * (ZarrStore.ShardWriter): body = concatenated present payloads in
   * arrival order, footer = row-major (offset, nbytes) uint64-LE pairs
   * + crc32c of the index bytes, missing slots = (-1, -1). The DSv2
   * reader's footer parse relies on exactly this. */
-class ZarrShardSpec extends AnyFunSuite {
+class ZarrShardSpec extends AnyFunSuite with TempDirs {
 
   private def parseFooter(obj: Array[Byte], slots: Int): Array[(Long, Long)] = {
     val idxLen = slots * 16
@@ -23,7 +25,7 @@ class ZarrShardSpec extends AnyFunSuite {
   /** One shard object streamed through the writer, payloads in the
     * given (slot, payload) order; raw local FS, so no `.crc` sidecar. */
   private def streamed(slots: Int, payloads: (Int, Array[Byte])*): Array[Byte] = {
-    val store = Files.createTempDirectory("zarr-shard-spec")
+    val store = tempDir("zarr-shard-spec")
     val fs = FileSystem.getLocal(new Configuration()).getRaw
     val w = new ZarrStore.ShardWriter(slots)
     try {
@@ -67,7 +69,7 @@ class ZarrShardSpec extends AnyFunSuite {
   }
 
   test("a shard that shows up again after another one fails, naming the shard") {
-    val store = Files.createTempDirectory("zarr-shard-split")
+    val store = tempDir("zarr-shard-split")
     val fs = FileSystem.getLocal(new Configuration()).getRaw
     val w = new ZarrStore.ShardWriter(2)
     try {

@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileSystem
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 import graft.imaging.{ZarrMeta, ZarrStore}
 import graft.testfs.MockFileSystem
 
@@ -20,7 +20,7 @@ import graft.testfs.MockFileSystem
   * The store sits behind the byte-counting `mock://` FileSystem, so
   * the assertion is on actual bytes fetched, not on plan shape.
   */
-class ShardSeekSpec extends AnyFunSuite {
+class ShardSeekSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
 
   // one shard of 4×4×4 uncompressed 64³ chunks: 64 slots × 512 KiB
@@ -36,7 +36,7 @@ class ShardSeekSpec extends AnyFunSuite {
     * (no Hadoop .crc sidecars), read back through mock:// for byte
     * counting. */
   private lazy val store: Path = {
-    val root = Files.createTempDirectory("graft-shard-seek")
+    val root = tempDir("graft-shard-seek")
     val lvl = root.resolve("0")
     Files.createDirectories(lvl.resolve("c/0/0/0/0"))
     Files.writeString(lvl.resolve("zarr.json"), ZarrMeta.render(

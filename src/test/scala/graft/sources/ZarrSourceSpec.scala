@@ -6,14 +6,14 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 import graft.functions.GraftExtensions
 import graft.imaging.{BloscCodec, ZarrMeta, ZarrStore}
 
 /** DataSource V2 `zarr` format: write/read round trip, chunk-grid
   * filter pushdown, listing-only column pruning, edge-chunk padding
   * and clipping, blosc compression, SQL function injection. */
-class ZarrSourceSpec extends AnyFunSuite {
+class ZarrSourceSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
   import spark.implicits._
 
@@ -56,7 +56,7 @@ class ZarrSourceSpec extends AnyFunSuite {
   }
 
   private def makeStore(compressed: Boolean): Path = {
-    val store = Files.createTempDirectory("zarr-src-spec")
+    val store = tempDir("zarr-src-spec")
     // self-describing write: shape option makes commit() emit .zarray
     chunkRows(0).toDF("level", "zc", "yc", "xc", "dz", "dy", "dx", "data")
       .write.format("zarr").mode("append")
@@ -118,7 +118,7 @@ class ZarrSourceSpec extends AnyFunSuite {
   }
 
   test("metadata-only scans never open chunk files (column pruning)") {
-    val store = Files.createTempDirectory("zarr-src-spec-meta")
+    val store = tempDir("zarr-src-spec-meta")
     writeZarrayMeta(store, 0, compressed = false)
     // no chunk files exist at all — a data scan would find nulls, but a
     // coordinate-only scan must still enumerate the full grid
@@ -133,7 +133,7 @@ class ZarrSourceSpec extends AnyFunSuite {
   test("v2 writer and foreachPartition sink produce identical chunk bytes") {
     import graft.imaging.SmartSpimPipeline.ChunkRow
     val store1 = makeStore(compressed = true)
-    val store2 = Files.createTempDirectory("zarr-src-spec-fep")
+    val store2 = tempDir("zarr-src-spec-fep")
     val ds = chunkRows(0)
       .map { case (_, zc, yc, xc, dz, dy, dx, data) =>
         ChunkRow("s", zc, yc, xc, dz, dy, dx, data) }
@@ -151,7 +151,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     // it) plus the job's level metadata, against the sink
     val grid = Seq(2, 2, 2)
     val store3 = makeStoreV3(compressed = true, Some(grid))
-    val store4 = Files.createTempDirectory("zarr-src-spec-fep-v3")
+    val store4 = tempDir("zarr-src-spec-fep-v3")
     val colocated = ds
       .repartition(floor(col("zc") / 2), floor(col("yc") / 2), floor(col("xc") / 2))
       .sortWithinPartitions(floor(col("zc") / 2), floor(col("yc") / 2),
@@ -201,7 +201,7 @@ class ZarrSourceSpec extends AnyFunSuite {
         }
         (0, zc, yc, xc, dz, dy, dx, data)
       }
-      val store = Files.createTempDirectory(s"zarr-prop")
+      val store = tempDir(s"zarr-prop")
       rows.toDF("level", "zc", "yc", "xc", "dz", "dy", "dx", "data")
         .write.format("zarr").mode("append")
         .option("chunk", chunk.mkString(","))
@@ -245,7 +245,7 @@ class ZarrSourceSpec extends AnyFunSuite {
     // job-side writer (convertStack: .zarray from ZarrMeta, chunk sink,
     // blosc) → DSv2 reader (readLevelMeta + chunk scan): the two write
     // paths and one read path must agree end to end.
-    val root = Files.createTempDirectory("graft-zarr-cross")
+    val root = tempDir("graft-zarr-cross")
     val (nz, ny, nx) = (2, 16, 16)
     val stack = graft.imaging.SyntheticStack.write(
       root.resolve("SmartSPIM/Ex_445_Em_469/440000/440000_460000"), nz, ny, nx)(
@@ -281,7 +281,7 @@ class ZarrSourceSpec extends AnyFunSuite {
   }
 
   private def makeStoreV3(compressed: Boolean, shard: Option[Seq[Int]]): Path = {
-    val store = Files.createTempDirectory("zarr-src-spec-v3")
+    val store = tempDir("zarr-src-spec-v3")
     val df0 = chunkRows(0).toDF("level", "zc", "yc", "xc", "dz", "dy", "dx", "data")
     val df = shard.fold(df0)(sh => shardAligned(df0, sh))
     val w = df.write.format("zarr").mode("append")
@@ -364,7 +364,7 @@ class ZarrSourceSpec extends AnyFunSuite {
   }
 
   test("v3 sharded: a missing inner chunk reads as null data") {
-    val store = Files.createTempDirectory("zarr-v3-missing")
+    val store = tempDir("zarr-v3-missing")
     // write only the (0,0,0) chunk of a 2x2x2 grid into (2,2,2)-chunk shards
     chunkRows(0).take(1).toDF("level", "zc", "yc", "xc", "dz", "dy", "dx", "data")
       .write.format("zarr").mode("append")
@@ -381,7 +381,7 @@ class ZarrSourceSpec extends AnyFunSuite {
   }
 
   test("v3 sink: a shard split round-robin over two tasks fails, naming the shard") {
-    val store = Files.createTempDirectory("zarr-v3-split")
+    val store = tempDir("zarr-v3-split")
     // the 8 chunks of ONE (2,2,2) shard; slice i of the rdd gets
     // chunks i, i+2, i+4, i+6 — each task holds half of the shard
     val rows = chunkRows(0).zipWithIndex.sortBy(_._2 % 2).map(_._1)

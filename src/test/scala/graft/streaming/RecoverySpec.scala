@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 import graft.queries.Streaming
 
 /** Checkpoint-restart recovery (round-11 verdict item 1): kill a
@@ -51,7 +51,7 @@ import graft.queries.Streaming
   * (compress/png_to_zarr.py:503-530); here the same property for
   * streaming state.
   */
-class RecoverySpec extends AnyFunSuite {
+class RecoverySpec extends AnyFunSuite with TempDirs {
   private lazy val parent = SparkSessionTestWrapper.spark
   private val dataDir = "/root/testdata/sf0.001"
 
@@ -76,9 +76,9 @@ class RecoverySpec extends AnyFunSuite {
     val ev = graft.Tables.normalizeTs(s.read.parquet(s"$dataDir/events.parquet"))
     val mm = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
     val mid = (mm.getLong(0) + mm.getLong(1)) / 2
-    val dir = Files.createTempDirectory("graft-rec-in")
+    val dir = tempDir("graft-rec-in")
     def writeHalf(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-rec-half")
+      val tmp = tempDir("graft-rec-half")
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = Files.list(tmp).iterator().asScala
         .find(_.getFileName.toString.startsWith("part-")).get
@@ -102,8 +102,8 @@ class RecoverySpec extends AnyFunSuite {
       rocksdb: Boolean = false): (Seq[Seq[Any]], Long, Long) = {
     val s = child(rocksdb)
     val in = splitInput.toString
-    val ck = Files.createTempDirectory("graft-rec-ck").toString
-    val out = Files.createTempDirectory("graft-rec-out").toString
+    val ck = tempDir("graft-rec-ck").toString
+    val out = tempDir("graft-rec-out").toString
     val schema = s.read.parquet(in).schema
     def start(throttled: Boolean) = {
       val w = logic(
@@ -139,16 +139,7 @@ class RecoverySpec extends AnyFunSuite {
     q2.stop()
     val rows = finish(s.read.parquet(out)).collect()
       .map(_.toSeq).toSeq.sortBy(_.mkString("|"))
-    deleteRecursively(ck)
-    deleteRecursively(out)
     (rows, killedAt, resumedAt)
-  }
-
-  private def deleteRecursively(path: String): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(new java.io.File(path))
   }
 
   private def oracleEntry(name: String): Seq[Seq[Any]] =

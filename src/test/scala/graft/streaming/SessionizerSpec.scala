@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.SparkSessionTestWrapper
+import graft.{SparkSessionTestWrapper, TempDirs}
 import Sessionizer._
 
-class SessionizerSpec extends AnyFunSuite {
+class SessionizerSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSessionTestWrapper.spark
 
   test("advance folds events into gap-delimited sessions") {
@@ -120,7 +120,7 @@ class SessionizerSpec extends AnyFunSuite {
     val t0 = 1700000000000L
     val input = MemoryStream[TEvent]
     val qn = "tws_latex_out"
-    val ck = java.nio.file.Files.createTempDirectory("ck_tws_latex").toString
+    val ck = tempDir("ck_tws_latex").toString
     val q = TypeSessionizer.sessionize(input.toDS(), gap)
       .writeStream.outputMode("append").format("memory").queryName(qn)
       .option("checkpointLocation", ck).start()
@@ -172,7 +172,7 @@ class SessionizerSpec extends AnyFunSuite {
     val gapMs = 60000L
     val input = MemoryStream[Event]
     val qn = "sessions_state_scale"
-    val ck = java.nio.file.Files.createTempDirectory("ck_state_scale").toString
+    val ck = tempDir("ck_state_scale").toString
     val q = sessionize(input.toDS(), gapMs, "1 second")
       .writeStream.outputMode("append").format("memory").queryName(qn)
       .option("checkpointLocation", ck).start()
