@@ -4,37 +4,20 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Targeted micro-benchmarks for engineering evidence (BASELINE.md):
-  * `sbt "runMain graft.MicroBench topk [rows] [keys]"` times the
-  * window top-k pattern with WindowExec vs the custom heap operator
-  * on synthetic data (deterministic, no testdata dependency).
+  * `sbt "runMain graft.MicroBench <mode> [args]"`, one mode per
+  * run (e.g. `zipf` times the corpus-frequency window against the
+  * heavy-hitter split on synthetic Zipf keys).
   */
 object MicroBench {
   def main(args: Array[String]): Unit = {
-    val what = args.headOption.getOrElse("topk")
+    val what = args.headOption.getOrElse {
+      System.err.println("usage: MicroBench <mode> [args]")
+      sys.exit(2)
+    }
     val rows = args.lift(1).map(_.toLong).getOrElse(20000000L)
-    val keys = args.lift(2).map(_.toInt).getOrElse(1000)
-    val spark = graft.core.Sessions.local(topK = false)
+    val spark = graft.core.Sessions.local()
 
     what match {
-      case "topk" =>
-        val df = spark.range(rows).select(
-          (col("id") % keys).as("grp"),
-          ((col("id") * 2654435761L) % 1000003L).as("value"),
-          col("id"))
-        def topk() = {
-          val w = Window.partitionBy("grp").orderBy(col("value").desc, col("id").asc)
-          df.withColumn("rn", row_number().over(w)).where(col("rn") <= 5)
-            .agg(count(lit(1)), sum("value")).collect()
-        }
-        def time(f: () => Unit): Double = {
-          val t0 = System.nanoTime(); f(); (System.nanoTime() - t0) / 1e9
-        }
-        topk() // warm both paths' codegen on the small side
-        val window = (1 to 3).map(_ => time(() => topk())).min
-        graft.plans.TopKPerKeyPlans.install(spark)
-        topk()
-        val heap = (1 to 3).map(_ => time(() => topk())).min
-        println(f"""{"bench":"topk","rows":$rows,"keys":$keys,"window_sec":$window%.3f,"heap_sec":$heap%.3f,"speedup":${window / heap}%.2f}""")
       case "zipf" =>
         // Straggler-vs-fix for corpus-frequency attach on a Zipf(1.0)
         // key (the q_quality_lm / q_mix_doremi / q_dedup_spans shape):

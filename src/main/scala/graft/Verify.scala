@@ -10,8 +10,8 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val spark = graft.core.Sessions.local(graft.core.Sessions.cpus("4"))
-    // the factory installs the custom top-k operator: every window
-    // top-k query's hash-match doubles as its regression test
+    // every session plans the custom top-k operator (GraftExtensions):
+    // every window top-k query's hash-match doubles as its regression test
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,18 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extension (`spark.sql.extensions=graft.functions.GraftExtensions`):
-  * registers the engine's native codegen'd expressions in the SQL
-  * function registry (so `spark.sql("SELECT cosine_sim(a, b) ...")`
-  * works without the Scala DSL) and injects the heap-based top-k
-  * optimizer rule + strategy ([[graft.plans.TopKPerKey]]). Complements
-  * [[VectorExpressions.register]] / [[graft.plans.TopKPerKeyPlans.install]]
-  * which do the same per-session.
+/** The engine's session extension, applied to every session Spark
+  * builds: it is listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * which `SparkSession.builder().getOrCreate()` service-loads with no
+  * `spark.sql.extensions` setting, and `newSession()` children share
+  * their parent's extensions. It registers the native codegen'd
+  * expressions in the SQL function registry (so
+  * `spark.sql("SELECT cosine_sim(a, b) ...")` works without the Scala
+  * DSL) and the heap-based top-k planner strategy
+  * ([[graft.plans.TopKStrategy]]).
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
 
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[DotProduct].getName, null, name, usage, "")
@@ -24,7 +27,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction((FunctionIdentifier("cosine_sim"),
       info("cosine_sim", "cosine_sim(a, b) - float-vector cosine similarity"),
       (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    e.injectOptimizerRule(_ => graft.plans.RewriteTopKWindow)
     e.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }

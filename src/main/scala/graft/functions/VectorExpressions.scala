@@ -189,12 +189,4 @@ object VectorExpressions {
   def bandedSig(emb: Column, planes: Array[Array[Double]],
       rows: Int, bands: Int): Column =
     column(BandedSignature(expression(emb), planes, rows, bands))
-
-  /** SQL registration (`SELECT cosine_sim(a, b)`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-  }
 }

@@ -7,46 +7,44 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode, Window}
-import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy, UnaryExecNode}
 
-/** Whole-operator top-k per key (SURVEY.md §4 "custom pieces" — the one
-  * pattern Spark's built-ins can't execute optimally): the ubiquitous
+/** Whole-operator top-k per key (SURVEY.md §4 "custom pieces"): the
+  * ubiquitous
   *
   *   .withColumn("rn", row_number().over(Window.partitionBy(K).orderBy(O)))
   *   .where($"rn" <= k)
   *
-  * plan shape executes as WindowExec — a FULL SORT of every partition's
-  * rows — only to throw away all but k rows per key. `TopKPerKeyExec`
-  * keeps a bounded k-element heap per key instead: O(n log k) with no
-  * sort buffer or spill, same shuffle (clustered by K), identical
-  * results for a total ordering.
+  * plan shape executes as a WindowExec that numbers each key's sorted
+  * rows only for the Filter to throw away all but k of them.
+  * `TopKPerKeyExec` keeps a bounded k-element heap per key instead:
+  * same shuffle (clustered by K), at most k·|keys| rows buffered,
+  * identical results for a total ordering.
   *
-  * Measured (BASELINE.md micro-bench): 1.1–1.2× faster than WindowExec
-  * when rows/key ≫ k; ~13% slower at rows/key ≈ k (hash-map overhead).
-  * The at-scale advantage is bounded memory — at most k·|keys| rows
-  * buffered where WindowExec sorts and spills whole partitions.
+  * In the shipped plans it sits ABOVE Spark's own group limit: Spark's
+  * `InferWindowGroupLimit` puts a `WindowGroupLimit` under the Window,
+  * planned as partial limit → shuffle → sort → final limit, and the
+  * heap replaces the WindowExec on top of that sorted, already-limited
+  * stream. Measured (BASELINE.md round 12, `WindowExec` vs the heap on
+  * synthetic top-5): 1.10–1.11× faster at every measured rows/key.
   *
-  * The pieces, wired through `spark.experimental` (install()):
-  *  - [[TopKPerKey]]      — logical node carrying keys/order/k
-  *  - [[RewriteTopKWindow]] — optimizer rule matching Filter(rn ≤ k, Window(row_number))
-  *  - [[TopKStrategy]]    — planner strategy
-  *  - [[TopKPerKeyExec]]  — heap-based physical operator
+  * The pieces:
+  *  - [[TopKStrategy]]   — planner strategy matching Filter(rn ≤ k, Window(row_number))
+  *  - [[TopKPerKeyExec]] — heap-based physical operator
   *
-  * The original Filter is left on top of the rewritten node, so any
+  * Every session gets the strategy from [[graft.functions.GraftExtensions]].
+  * It is a strategy and not an optimizer rule because a strategy sees
+  * the fully optimized plan: a rule injected into the optimizer runs
+  * before `InferWindowGroupLimit` and so loses the group limit before
+  * the shuffle.
+  *
+  * The original Filter is kept on top of the operator, so any
   * predicate shape (rn <= k, rn < k, rn === k, conjunctions) keeps its
-  * exact semantics; the rule only needs an upper bound for the heap.
+  * exact semantics; the match only needs an upper bound for the heap.
   */
-case class TopKPerKey(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
-    rnAttr: Attribute, child: LogicalPlan) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output :+ rnAttr
-  override protected def withNewChildInternal(newChild: LogicalPlan): TopKPerKey =
-    copy(child = newChild)
-}
-
-object RewriteTopKWindow extends Rule[LogicalPlan] {
+object TopKStrategy extends SparkStrategy with PredicateHelper {
 
   /** Upper bound on rn implied by one conjunct, if any. */
   private def bound(c: Expression, rn: Attribute): Option[Int] = c match {
@@ -57,27 +55,15 @@ object RewriteTopKWindow extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def splitAnd(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitAnd(l) ++ splitAnd(r)
-    case other => Seq(other)
-  }
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case f @ Filter(cond,
-        Window(Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)),
-          partitionSpec, orderSpec, child, _))
-        if partitionSpec.nonEmpty && orderSpec.nonEmpty =>
-      val rn = alias.toAttribute
-      val ks = splitAnd(cond).flatMap(bound(_, rn))
-      if (ks.isEmpty || ks.min <= 0) f
-      else Filter(cond, TopKPerKey(partitionSpec, orderSpec, ks.min, rn, child))
-  }
-}
-
-object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case TopKPerKey(keys, order, k, rnAttr, child) =>
-      TopKPerKeyExec(keys, order, k, rnAttr, planLater(child)) :: Nil
+    case Filter(cond,
+        Window(Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)),
+          keys, order, child, _))
+        if keys.nonEmpty && order.nonEmpty =>
+      val rn = alias.toAttribute
+      val ks = splitConjunctivePredicates(cond).flatMap(bound(_, rn))
+      if (ks.isEmpty || ks.min <= 0) Nil
+      else FilterExec(cond, TopKPerKeyExec(keys, order, ks.min, rn, planLater(child))) :: Nil
     case _ => Nil
   }
 }
@@ -89,7 +75,8 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(keys) :: Nil
-  // no required child ordering — that's the point: the heap replaces the sort
+  // no required child ordering: the heap needs none, though in the
+  // shipped plans its child is Spark's sorted final WindowGroupLimit
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
@@ -136,20 +123,8 @@ case class TopKPerKeyExec(keys: Seq[Expression], order: Seq[SortOrder], k: Int,
 }
 
 object TopKPerKeyPlans {
-  /** Install the rule + strategy on a session (idempotent). */
-  def install(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraOptimizations.contains(RewriteTopKWindow))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteTopKWindow
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-  }
-
-  def uninstall(spark: SparkSession): Unit = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == RewriteTopKWindow)
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_ == TopKStrategy)
-  }
+  /** No-op: every session already plans [[TopKStrategy]]. Kept only
+    * because the benchmark harness (`perfbench/scala/Main.scala`)
+    * still calls it. */
+  def install(spark: SparkSession): Unit = ()
 }

@@ -997,8 +997,8 @@ object Curation {
     * order (n_chars desc, doc_id asc), profile kept/dropped and the
     * admission threshold per source. The rank is a per-key window — at
     * 100 TB it hash-partitions by source and sorts only within each
-    * key's partition (and the custom TopKPerKey physical operator
-    * bounds the per-partition state to CAP rows). The same plan with
+    * key's partition ([[graft.plans.TopKStrategy]] plans the heap
+    * operator, CAP rows of state per key). The same plan with
     * `where(rn <= CAP)` on the doc rows emits the capped corpus. */
   val qCapPerSource: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window

@@ -615,8 +615,8 @@ object Relational {
     * replayable in the oracle). Sketch construction is the ONLY
     * corpus-scale pass: a two-phase (source, h) distinct, then the
     * bottom-K per source — written in the row_number window form that
-    * [[graft.plans.RewriteTopKWindow]] rewrites to the bounded-heap
-    * operator (no full per-source sort at scale). The exact distinct /
+    * [[graft.plans.TopKStrategy]] plans as the bounded-heap operator,
+    * above Spark's own WindowGroupLimit. The exact distinct /
     * intersection columns are the AUDIT the sketch replaces, kept so
     * the oracle hash pins estimator error, not just the samples;
     * per-key fan-out of the exact hash self-join is bounded by the
@@ -883,8 +883,8 @@ object Relational {
     * CMS/KMV style.
     *
     * Scale: the sample is the row_number-≤-K window form that
-    * [[graft.plans.RewriteTopKWindow]] executes as the bounded heap
-    * (K·|types| rows of state, ONE shuffle, no per-type sort); the
+    * [[graft.plans.TopKStrategy]] executes as the bounded heap above
+    * Spark's WindowGroupLimit (K·|types| rows of state per limit); the
     * order statistics run on ≤ K·|types| rows; the audit broadcasts
     * the |types|×3-row estimate table into one scan of the corpus. At
     * 100 TB you keep the sketch and drop the audit. */

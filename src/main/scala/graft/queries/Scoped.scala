@@ -224,13 +224,12 @@ object Scoped {
     * child from `newSession()` holds no reference to its parent, so a
     * dropped parent and its child are collectable. The child's SQLConf
     * starts from the SparkContext's conf: runtime `conf.set` calls on
-    * the parent do not reach it. Its planner rules are the parent's,
-    * re-copied on every call ([[graft.core.Sessions.child]]). */
+    * the parent do not reach it. Its session extensions, the top-k
+    * planner strategy among them, are the parent's. */
   private val floorSessions = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, SparkSession]())
 
   def coalesceFloorSession(parent: SparkSession): SparkSession =
-    graft.core.Sessions.inheritRules(parent, floorSessions.computeIfAbsent(parent,
-      graft.core.Sessions.child(_,
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> FloorMinPartitionSize)))
+    floorSessions.computeIfAbsent(parent, graft.core.Sessions.child(_,
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> FloorMinPartitionSize))
 }

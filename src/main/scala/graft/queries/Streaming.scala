@@ -46,7 +46,7 @@ object Streaming {
     * session-global conf (which a CONCURRENT batch query on the shared
     * session would observe), each streaming query runs on its own child
     * session ([[graft.core.Sessions.child]]): shared SparkContext,
-    * cached data and planner rules, isolated SQLConf — no other query
+    * cached data and extensions, isolated SQLConf — no other query
     * can ever see n=2. The child also
     * carries the nanos-as-long legacy parquet flag the event fixtures
     * need, again without touching the parent. Children are not closed

@@ -268,28 +268,38 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("custom TopKPerKey operator engages on the inventory's per-group top-k") {
-    graft.plans.TopKPerKeyPlans.install(spark)
-    try {
-      val p = SparkEntry.queries("q_topk_per_group")(spark, SF)
-        .queryExecution.executedPlan.toString
-      assert(p.contains("TopKPerKey"),
-        "q_topk_per_group should run through the heap-based operator")
-    } finally graft.plans.TopKPerKeyPlans.uninstall(spark)
+    val p = SparkEntry.queries("q_topk_per_group")(spark, SF)
+      .queryExecution.executedPlan.toString
+    assert(p.contains("TopKPerKey"),
+      "q_topk_per_group should run through the heap-based operator")
   }
 
   test("child sessions keep the parent's planner rules (floor session plans TopKPerKey)") {
-    val parent = spark.newSession()
-    def floorPlan: String = graft.queries.Scoped.planOnly {
-      SparkEntry.queries("q_topk_per_group")(
-        graft.queries.Scoped.coalesceFloorSession(parent), SF)
-        .queryExecution.executedPlan.toString
+    // Every session, children included, gets the strategy from the
+    // service-loaded extension. The heap must sit
+    // above Spark's own WindowGroupLimit; a match made by an optimizer
+    // rule runs before InferWindowGroupLimit and loses that limit.
+    val sessions = Seq(
+      "newSession()" -> spark.newSession(),
+      "coalesceFloorSession" -> graft.queries.Scoped.coalesceFloorSession(spark),
+      "Sessions.child" -> graft.core.Sessions.child(spark))
+    for ((label, s) <- sessions) {
+      val plan = graft.queries.Scoped.planOnly {
+        SparkEntry.queries("q_topk_per_group")(s, SF).queryExecution.sparkPlan
+      }
+      val heaps = plan.collect { case t: graft.plans.TopKPerKeyExec => t }
+      assert(heaps.nonEmpty, s"$label: q_topk_per_group should plan TopKPerKey")
+      assert(heaps.forall(_.child.exists(_.isInstanceOf[
+          org.apache.spark.sql.execution.window.WindowGroupLimitExec])),
+        s"$label: TopKPerKey should sit above Spark's WindowGroupLimit\n$plan")
     }
-    graft.plans.TopKPerKeyPlans.install(parent)
-    assert(floorPlan.contains("TopKPerKey"),
-      "a top-k window on the floor session should run through the heap operator")
-    // the floor child is memoized: a later uninstall still reaches it
-    graft.plans.TopKPerKeyPlans.uninstall(parent)
-    assert(!floorPlan.contains("TopKPerKey"))
+  }
+
+  test("GraftExtensions is a service-loaded SparkSessionExtensionsProvider") {
+    import scala.jdk.CollectionConverters._
+    val providers = java.util.ServiceLoader.load(
+      classOf[org.apache.spark.sql.SparkSessionExtensionsProvider]).asScala.map(_.getClass)
+    assert(providers.exists(_ == classOf[graft.functions.GraftExtensions]))
   }
 
   test("windowed queries partition their window (no empty partitionBy sorts)") {

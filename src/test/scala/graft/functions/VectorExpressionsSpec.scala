@@ -37,7 +37,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
 
   test("SQL registration works (cosine_sim / dot_product)") {
     import spark.implicits._
-    VectorExpressions.register(spark)
+    // the service-loaded GraftExtensions registers both on every session
     Seq((Array(1.0f, 0.0f), Array(1.0f, 0.0f))).toDF("a", "b")
       .createOrReplaceTempView("vec_v")
     val r = spark.sql("SELECT cosine_sim(a, b) c, dot_product(a, b) d FROM vec_v")

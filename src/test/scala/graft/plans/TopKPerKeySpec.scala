@@ -1,77 +1,86 @@
 package graft.plans
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSessionTestWrapper
 
-/** The custom top-k operator must be plan-visible and row-identical to
-  * the WindowExec it replaces, across filter shapes and edge cases. */
+/** The custom top-k operator must be plan-visible and return each
+  * group's first rows in window order, across filter shapes and edge
+  * cases. The expected rows are computed without Spark. */
 class TopKPerKeySpec extends AnyFunSuite {
   private lazy val spark = SparkSessionTestWrapper.spark
 
-  private def df = {
-    import spark.implicits._
-    // 7 groups × 40 rows with a total (value desc, id asc) ordering,
-    // plus one tiny group with fewer than k rows
-    ((0 until 280).map(i => (i % 7, (i * 131) % 97, i)) ++
-      Seq((99, 5, 1000), (99, 5, 1001)))
-      .toDF("grp", "value", "id")
-  }
+  // 7 groups × 40 rows with a total (value desc, id asc) ordering,
+  // plus one tiny group with fewer than k rows
+  private val input: Seq[(Int, Int, Int)] =
+    (0 until 280).map(i => (i % 7, (i * 131) % 97, i)) ++
+      Seq((99, 5, 1000), (99, 5, 1001))
 
-  private def topk(k: Int, pred: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
+  private def topk(pred: Column => Column): DataFrame = {
+    import spark.implicits._
     val w = Window.partitionBy("grp").orderBy(col("value").desc, col("id").asc)
-    df.withColumn("rn", row_number().over(w))
+    input.toDF("grp", "value", "id")
+      .withColumn("rn", row_number().over(w))
       .where(pred(col("rn")))
       .orderBy("grp", "rn")
   }
 
-  private def withOperator[T](body: => T): T = {
-    TopKPerKeyPlans.install(spark)
-    try body finally TopKPerKeyPlans.uninstall(spark)
-  }
-
-  test("rn <= k rewrites to TopKPerKey and matches WindowExec row-for-row") {
-    val expected = topk(3, _ <= 3).collect().toSeq
-    withOperator {
-      val q = topk(3, _ <= 3)
-      assert(q.queryExecution.executedPlan.toString.contains("TopKPerKey"),
-        "rule should have rewritten the window")
-      assert(q.collect().toSeq == expected)
+  /** Plain-Scala answer: (grp, value, id, rn) with rn numbering each
+    * group's rows in (value desc, id asc) order, kept where `keep(rn)`,
+    * sorted by (grp, rn). The ordering is total, so it is unique. */
+  private def expected(keep: Int => Boolean): Seq[(Int, Int, Int, Int)] =
+    input.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (_, rows) =>
+      rows.sortBy { case (_, v, id) => (-v, id) }.zipWithIndex.collect {
+        case ((g, v, id), i) if keep(i + 1) => (g, v, id, i + 1)
+      }
     }
+
+  private def rowsOf(q: DataFrame): Seq[(Int, Int, Int, Int)] =
+    q.collect().toSeq.map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3)))
+
+  private def heapPlanned(q: DataFrame): Boolean =
+    q.queryExecution.executedPlan.toString.contains("TopKPerKey")
+
+  test("rn <= k plans TopKPerKey and returns each group's first k rows") {
+    val q = topk(_ <= 3)
+    assert(heapPlanned(q), "the strategy should have planned the heap")
+    assert(rowsOf(q) == expected(_ <= 3))
   }
 
   test("rn === 1 (argmax per key) and rn < k shapes also rewrite") {
-    for ((pred, label) <- Seq(
-        ((c: org.apache.spark.sql.Column) => c === 1, "eq1"),
-        ((c: org.apache.spark.sql.Column) => c < 4, "lt4"))) {
-      val expected = topk(5, pred).collect().toSeq
-      withOperator {
-        val q = topk(5, pred)
-        assert(q.queryExecution.executedPlan.toString.contains("TopKPerKey"), label)
-        assert(q.collect().toSeq == expected, label)
-      }
+    for ((pred, keep, label) <- Seq[(Column => Column, Int => Boolean, String)](
+        (_ === 1, _ == 1, "eq1"),
+        (_ < 4, _ < 4, "lt4"))) {
+      val q = topk(pred)
+      assert(heapPlanned(q), label)
+      assert(rowsOf(q) == expected(keep), label)
     }
   }
 
   test("groups smaller than k emit all their rows (tiny-group edge)") {
-    withOperator {
-      val rows = topk(3, _ <= 3).where(col("grp") === 99).collect()
-      assert(rows.map(r => (r.getInt(2), r.getInt(3))).toSeq == Seq((1000, 1), (1001, 2)))
-    }
+    val rows = topk(_ <= 3).where(col("grp") === 99).collect()
+    assert(rows.map(r => (r.getInt(2), r.getInt(3))).toSeq == Seq((1000, 1), (1001, 2)))
   }
 
   test("global windows and non-row_number windows are left untouched") {
-    withOperator {
-      val g = df.withColumn("rn", row_number().over(
-          Window.orderBy(col("value").desc, col("id").asc)))
-        .where(col("rn") <= 3)
-      assert(!g.queryExecution.executedPlan.toString.contains("TopKPerKey"))
-      val r = df.withColumn("rk", rank().over(
-          Window.partitionBy("grp").orderBy(col("value").desc)))
-        .where(col("rk") <= 3)
-      assert(!r.queryExecution.executedPlan.toString.contains("TopKPerKey"))
-    }
+    import spark.implicits._
+    val df = input.toDF("grp", "value", "id")
+    val g = df.withColumn("rn", row_number().over(
+        Window.orderBy(col("value").desc, col("id").asc)))
+      .where(col("rn") <= 3)
+    assert(!heapPlanned(g))
+    val r = df.withColumn("rk", rank().over(
+        Window.partitionBy("grp").orderBy(col("value").desc)))
+      .where(col("rk") <= 3)
+    assert(!heapPlanned(r))
+  }
+
+  test("rn >= k bounds no heap: left to Spark, same rows") {
+    val q = topk(_ >= 38)
+    assert(!heapPlanned(q))
+    assert(rowsOf(q) == expected(_ >= 38))
   }
 }

@@ -2,12 +2,10 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkSessionTestWrapper, TempDirs}
-import graft.functions.GraftExtensions
 import graft.imaging.{BloscCodec, ZarrMeta, ZarrStore}
 
 /** DataSource V2 `zarr` format: write/read round trip, chunk-grid
@@ -536,9 +534,10 @@ class ZarrSourceSpec extends AnyFunSuite with TempDirs {
   }
 
   test("GraftExtensions injects dot_product and cosine_sim into the registry") {
-    val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext)
-    val added = org.apache.spark.sql.ExtensionsProbe.registeredNames(ext)
-    assert(added.toSet == Set("dot_product", "cosine_sim"))
+    // the test session is built by the plain factory: the functions
+    // come from the service-loaded extension
+    val r = spark.sql("SELECT cosine_sim(array(3.0F, 4.0F), array(3.0F, 4.0F)) c, " +
+      "dot_product(array(3.0F, 4.0F), array(1.0F, 2.0F)) d").collect().head
+    assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 11.0)
   }
 }
